@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
+from .cache import table_meta, table_path
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -26,17 +28,6 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-# (applicationId, path, file fingerprint) -> scan-definition DataFrame.
-# Each spark.read.parquet call runs a ~100 ms single-task schema/footer
-# job; a bench run constructs the same 10 scan definitions hundreds of
-# times. Caching the DEFINITION (resolved schema + file listing — the
-# metastore/catalog analog, guide §6 "file listing cached per session")
-# holds no materialized data, so clear_plan_caches doesn't touch it; the
-# stat fingerprint in the key makes a table rewritten in place within one
-# session miss the cache instead of reusing a stale listing.
-_SCAN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -52,19 +43,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # nanos-precision events table readable at all.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/{name}.parquet"
-    import os
+    return _scan(spark, sf_dir, name)
 
-    try:
-        stt = os.stat(path)
-        fp = (stt.st_mtime_ns, stt.st_size)
-    except OSError:
-        fp = None
-    key = (spark.sparkContext.applicationId, path, fp)
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(path)
+
+@table_meta
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The scan DEFINITION (resolved schema + file listing, no data): each
+    ``spark.read.parquet`` runs a ~100 ms single-task schema/footer job,
+    and a bench run builds the same 10 scans hundreds of times."""
+    df = spark.read.parquet(table_path(sf_dir, name))
     # The driver has shipped two physical layouts across rounds: TIMESTAMP
     # (NANOS) columns (surfaced as int64 nanos via nanosAsLong) and plain
     # micros TIMESTAMP_NTZ. Normalize both to session-UTC TIMESTAMP so every
@@ -85,7 +72,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             and isinstance(field.dataType, LongType)
         ):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    _SCAN_CACHE[key] = df
     return df
 
 
@@ -93,18 +79,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
-# (applicationId, sf_dir, table) -> whether the scan needs the fan-out;
-# the .rdd partition probe costs a plan analysis, so remember it.
-# NOTE (r11, measured): spreading at LOAD for every consumer was tried
-# and reverted — it helps one-pass per-row-heavy kernels but wrecks
-# iterative algorithms over small frames (BPE merge rounds 2.5s->7.3s,
-# kmeans pipeline 2.3s->8.6s: every iteration inherits session-width
-# partitioning and pays empty-task scheduling). Apply spread_scan at the
-# consumer, only in front of one-pass compute-heavy pipelines.
-_SPREAD_DECISION: dict[tuple[str, str, str], bool] = {}
-
-
-def spread_scan(df: DataFrame, _key: tuple | None = None) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Fan a single-task scan out to the session's parallelism before a
     compute-heavy pipeline (guide §2.5 input skew / §6 small files).
 
@@ -117,15 +92,19 @@ def spread_scan(df: DataFrame, _key: tuple | None = None) -> DataFrame:
     that already scans with >= defaultParallelism partitions (multi-file
     / multi-row-group production tables) passes through untouched, so
     the call is a no-op exactly when the fan-out would be a pessimation.
+    The narrow-or-wide probe (``.rdd`` partition count) costs a plan
+    analysis, so a caller that spreads one table repeatedly caches the
+    result as table metadata (``io/cache.py``).
+
+    NOTE (r11, measured): spreading at LOAD for every consumer was tried
+    and reverted — it helps one-pass per-row-heavy kernels but wrecks
+    iterative algorithms over small frames (BPE merge rounds 2.5s->7.3s,
+    kmeans pipeline 2.3s->8.6s: every iteration inherits session-width
+    partitioning and pays empty-task scheduling). Apply spread_scan at the
+    consumer, only in front of one-pass compute-heavy pipelines.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if _key is not None and _key in _SPREAD_DECISION:
-        narrow = _SPREAD_DECISION[_key]
-    else:
-        narrow = df.rdd.getNumPartitions() < target
-        if _key is not None:
-            _SPREAD_DECISION[_key] = narrow
-    if narrow:
+    if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
     return df
 

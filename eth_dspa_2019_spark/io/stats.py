@@ -4,18 +4,12 @@ Every scalar a plan builder needs at plan-construction time (row counts,
 id ranges, distinct-key cardinalities, value extrema) is an immutable
 property of the testdata parquet — the analog of catalog/table statistics
 a real deployment reads from the metastore (ANALYZE TABLE output), not a
-query result. Before this module each plan that needed one ran its own
-scalar Spark job at build time (``emb.count()``, ``max(user_id)``,
-``count(DISTINCT user_id)`` …), so the bench's cold-cache loop re-learned
-the same constants dozens of times per session — pure job-count overhead
-(guide §1.2: remove passes that recompute known quantities).
+query result, so it is computed once, not once per plan build (guide
+§1.2: remove passes that recompute known quantities).
 
 One aggregation job per TABLE computes every stat the engine uses, on the
-first request; later requests (same session + sf_dir) are dictionary
-lookups. Deliberately NOT cleared by ``plans.clear_plan_caches`` — that
-function scopes to materialized query DATA; these are table statistics
-(same contract as the former per-module stats caches, which this module
-generalizes).
+first request; the Row is then table metadata in the session cache
+(``io/cache.py``), kept by ``plans.clear_plan_caches``.
 
 At 100 TB the same numbers come from table metadata / ANALYZE statistics;
 the one-pass-per-table fallback here is itself scale-safe (single scan,
@@ -27,10 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import table_meta
 from .readers import load_table
-
-# (applicationId, sf_dir, table) -> stats Row
-_CACHE: dict[tuple[str, str, str], Row] = {}
 
 
 def _events_exprs():
@@ -73,15 +65,11 @@ _STAT_EXPRS = {
 }
 
 
+@table_meta
 def table_stats(spark: SparkSession, sf_dir: str, table: str) -> Row:
     """All cached scalar statistics of one testdata table (one agg job on
-    first use per session + sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    if key not in _CACHE:
-        _CACHE[key] = (
-            load_table(spark, sf_dir, table).agg(*_STAT_EXPRS[table]()).collect()[0]
-        )
-    return _CACHE[key]
+    first use per session + table version)."""
+    return load_table(spark, sf_dir, table).agg(*_STAT_EXPRS[table]()).collect()[0]
 
 
 def n_rows(spark: SparkSession, sf_dir: str, table: str) -> int:

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import KIND_COMMENT, KIND_LIKE, KIND_POST, KIND_REPLY
+from ..session import broadcast_threshold
 
 BACKDATE_MS = 7_200_000  # 2 h deterministic perturbation
 BACKDATE_MOD = 17
@@ -84,25 +85,15 @@ def _forest_walk(acts: DataFrame, keep_semantics: bool | None = None) -> DataFra
     filter+project, False → C2 project, None → full frame.
     """
     posts = _posts_ts(acts)
-    # r12: one seed scan yields the reply probe AND the size knobs for
-    # the per-level joins — callers pass frames with no size statistics
-    # (checkpointed RDDs), so Catalyst planned every level as a two-sided
-    # shuffle join; when the MEASURED side fits the session's broadcast
-    # threshold, hint it (the same stats-informed choice as
-    # operators/resolve.py; big forests keep the shuffle joins).
+    # r12: one seed scan yields the reply probe AND the measured sizes
+    # that decide each per-level join's broadcast hint (big forests keep
+    # the shuffle joins; see session.broadcast_threshold).
     n_posts, n_comments, n_replies = acts.agg(
         F.count(F.when(F.col("kind") == KIND_POST, 1)),
         F.count(F.when(F.col("kind") == KIND_COMMENT, 1)),
         F.count(F.when(F.col("kind") == KIND_REPLY, 1)),
     ).first()
-    try:
-        bthresh = int(
-            acts.sparkSession.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-        )
-    except ValueError:  # size-suffixed form — be conservative
-        bthresh = 10 * 1024 * 1024
+    bthresh = broadcast_threshold(acts.sparkSession)
 
     def _maybe_bcast(df: DataFrame, n_rows: int, width: int) -> DataFrame:
         return F.broadcast(df) if 0 <= n_rows * width < bthresh else df

@@ -88,10 +88,12 @@ def _pair_jaccard(sh: DataFrame, candidates: DataFrame | None = None) -> DataFra
         # shingles (a corpus-volume shuffle) to verify a candidate set
         # that is orders of magnitude smaller; that overhead made
         # incremental_dedup_newbatch net-slower at sf0.1. The candidate
-        # subtree now has two consumers (id screen + verify join), but
-        # both need the identical (doc_a, doc_b) distinct exchange, so
-        # ReuseExchange runs it once per job — no materialization barrier
-        # needed (asserted in tests/test_plans.py).
+        # subtree now has two consumers (id screen + verify join) and no
+        # materialization barrier between them. The executed plan does
+        # not reuse the candidate exchange (the committed plan
+        # plans/r12/incremental_dedup_newbatch_after.txt has no
+        # ReusedExchange), so the candidate pipeline runs once for each
+        # consumer.
         cand_ids = candidates.select(
             F.explode(F.array("doc_a", "doc_b")).alias("id")
         ).distinct()

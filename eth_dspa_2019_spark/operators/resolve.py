@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import KIND_COMMENT, KIND_LIKE, KIND_POST, KIND_REPLY
+from ..session import broadcast_threshold
 
 MAX_ITERS = 64  # supports comment-tree depth up to 2^64 — effectively unbounded
 
@@ -59,23 +60,10 @@ def _pointer_chase_fixpoint(mapping: DataFrame, resolved_col: str, chase_cols) -
     working = mapping.filter(rcol.isNull() & F.col("ptr").isNotNull())
     parts.append(mapping.filter(rcol.isNull() & F.col("ptr").isNull()))
 
-    # r12: checkpointed-RDD unions carry no size statistics, so Catalyst
-    # plans every chase hop as a two-sided shuffle join — ~12 AQE stage
-    # jobs per round for a relation whose size we have just measured.
-    # When the MEASURED mapping bytes (the lookup side is always ⊆ the
-    # seed mapping — rows only move between parts) fit the session's own
-    # broadcast threshold, hint the lookup side broadcast — the
-    # statistics-informed choice Spark would make itself if RDD-backed
-    # relations had stats (guide §3.1). Data-derived knob: huge forests
-    # keep the shuffle join unchanged.
-    try:
-        bthresh = int(
-            mapping.sparkSession.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-        )
-    except ValueError:  # size-suffixed form ("10m") — be conservative
-        bthresh = 10 * 1024 * 1024
+    # r12: without a hint every chase hop plans as a two-sided shuffle
+    # join (~12 AQE stage jobs per round). Broadcast the lookup side when
+    # the MEASURED mapping bytes (the lookup side is always ⊆ the seed
+    # mapping) fit the session threshold; huge forests keep the shuffle.
     row_bytes = 8 * (len(mapping.columns) + 1)
     # one scan of the fresh checkpoint yields both the broadcast knob
     # (total rows) and the loop-exit probe (working rows)
@@ -83,7 +71,9 @@ def _pointer_chase_fixpoint(mapping: DataFrame, resolved_col: str, chase_cols) -
         F.count(F.lit(1)),
         F.count(F.when(rcol.isNull() & F.col("ptr").isNotNull(), 1)),
     ).first()
-    bcast_lookup = 0 <= n_mapping * row_bytes < bthresh
+    bcast_lookup = 0 <= n_mapping * row_bytes < broadcast_threshold(
+        mapping.sparkSession
+    )
 
     def _hop(w: DataFrame, lookup: DataFrame) -> DataFrame:
         if bcast_lookup:

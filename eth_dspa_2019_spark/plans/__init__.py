@@ -5,6 +5,7 @@ semantics are ANSI-SQL-expressible.
 Importing this package registers all queries.
 """
 
+from ..io.cache import drop_query_data
 from .registry import QuerySpec, all_queries, oracle_map, register
 
 # Importing the plan modules populates the registry.
@@ -30,8 +31,9 @@ from . import retrieval  # noqa: E402,F401
 
 
 def clear_plan_caches(spark) -> None:
-    """Release every materialization this session holds: the module-level
-    DataFrame caches (parse/resolve/LSH-pair reuse across queries), the SQL
+    """Release every materialization this session holds: the query-data
+    entries of the session cache (``io/cache.py``: parse/resolve/LSH-pair
+    reuse across queries; table metadata stays), the SQL
     cache (``DataFrame.persist`` blocks), and all persistent RDDs — which
     covers eager ``localCheckpoint`` blocks the SQL cache doesn't track.
 
@@ -46,19 +48,7 @@ def clear_plan_caches(spark) -> None:
        Intended for harnesses that rebuild every frame from scratch after
        each call (like bench.py's per-query loop); do not call it while
        user-held frames are outstanding."""
-    from ..sources import activity as _activity
-    from . import cleaning as _cleaning
-    from . import llm as _llm
-    from . import social as _social
-
-    for cache in (
-        _activity._ACTS_CACHE,
-        _social._RESOLVED_CACHE,
-        _llm._PAIRS_CACHE,
-        _cleaning._RAW_CACHE,
-        _cleaning._WALK_CACHE,
-    ):
-        cache.clear()
+    drop_query_data()
     spark.catalog.clearCache()
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()

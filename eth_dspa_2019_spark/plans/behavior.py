@@ -180,10 +180,12 @@ CORR_AUTO_BANDS = 12
 
 def _hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, hour, v): exact fixed-point hourly activity series,
-    materialized once (users×hours rows — tiny next to any pair fan-out;
-    released by clear_plan_caches), with the loud int64 overflow guard
-    (ADVICE r5): the co-moment sums downstream wrap silently with ANSI
-    off while the DuckDB oracle promotes to hugeint — past fixture scale
+    materialized once per call (users×hours rows — tiny next to any pair
+    fan-out; not a session-cache entry, io/cache.py — its checkpoint is
+    released by clear_plan_caches' persistent-RDD sweep), with the loud
+    int64 overflow guard (ADVICE r5): the co-moment sums downstream wrap
+    silently with ANSI off while the DuckDB oracle promotes to hugeint —
+    past fixture scale
     the engines would diverge without erroring. A pair co-moment is
     bounded by max|v|² × shared hours ≤ max|v|² × distinct hours, checked
     exactly in Python bigints against the int64 ceiling (one scalar agg

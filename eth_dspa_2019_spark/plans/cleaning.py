@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io.cache import query_data
 from ..operators.cleaning import (
     BACKDATE_MOD,
     BACKDATE_MS,
@@ -69,42 +70,34 @@ _O_LIKES_FIXED = f"""
 """
 
 
-# The three cleaning queries share the raw stream and (two of them) the
-# forest walk — materialize each once per session+scale.
-_RAW_CACHE: dict[tuple[str, str], DataFrame] = {}
-_WALK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 #: The only columns the C1/C2/C3 cleaners read — the checkpoint carries
 #: these 7 narrow fields instead of the full 16-column parse frame with
 #: content strings (guide §2.3 projection, applied at the cache boundary).
 _RAW_COLS = ("kind", "id", "person_id", "post_id", "parent_id", "ts_ms", "raw_ts")
 
 
+# The three cleaning queries share the raw stream and (two of them) the
+# forest walk — materialize each once per session+scale.
+@query_data
 def _raw_acts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RAW_CACHE:
-        _RAW_CACHE[key] = (
-            with_raw_ts(load_activities(spark, sf_dir))
-            .select(*_RAW_COLS)
-            .localCheckpoint(eager=True)
-        )
-    return _RAW_CACHE[key]
+    return (
+        with_raw_ts(load_activities(spark, sf_dir))
+        .select(*_RAW_COLS)
+        .localCheckpoint(eager=True)
+    )
 
 
+@query_data
 def _walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The forest walk computes both C1 validity and C2 repairs in one
     pass — shared by three queries, materialized once."""
     from ..operators.cleaning import _forest_walk
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WALK_CACHE:
-        # no outer checkpoint: the walk's per-level frames are already
-        # localCheckpointed, so the cached plan is a cheap union of
-        # materialized RDDs (and Spark 4's constraint rewrite rejects a
-        # checkpoint directly on that union).
-        _WALK_CACHE[key] = _forest_walk(_raw_acts(spark, sf_dir))
-    return _WALK_CACHE[key]
+    # no outer checkpoint: the walk's per-level frames are already
+    # localCheckpointed, so the cached plan is a cheap union of
+    # materialized RDDs (and Spark 4's constraint rewrite rejects a
+    # checkpoint directly on that union).
+    return _forest_walk(_raw_acts(spark, sf_dir))
 
 
 @register(

@@ -26,24 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.readers import load_table
+from ..session import broadcast_threshold
 from .registry import register
 
 TRI_FAN = 3  # synthesized neighbors per user
-
-
-def _bcast_thresh(spark: SparkSession) -> int:
-    """The session's broadcast threshold (bytes) for the measured-size
-    join knobs below — checkpointed-RDD relations carry no statistics,
-    so Catalyst cannot make the broadcast choice itself (guide §3.1);
-    the loop operators know their relation sizes (node/edge counts) and
-    hint the broadcast exactly when Spark would have, falling back to
-    shuffle joins on big graphs."""
-    try:
-        return int(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        )
-    except ValueError:  # size-suffixed form — be conservative
-        return 10 * 1024 * 1024
 
 
 def _o_edges() -> str:
@@ -156,7 +142,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge count now measured BEFORE the join is planned, broadcast that
     # side when it fits (guide §3.1): the wedge blowup then streams with
     # no exchange at all. Big graphs keep the shuffle joins.
-    small = n_edges * 24 < _bcast_thresh(spark)
+    small = n_edges * 24 < broadcast_threshold(spark)
 
     def mb(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
@@ -290,7 +276,7 @@ def graph_pagerank_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3-4). The per-iteration lineage cut STAYS in both modes: eliding it
     # was tried and measured slower (the K nested broadcast builds
     # serialize on the driver and the fused plan pays one big codegen).
-    small = n_nodes * 16 < _bcast_thresh(spark)
+    small = n_nodes * 16 < broadcast_threshold(spark)
 
     def mb(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
@@ -455,7 +441,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # streams the edge checkpoint with no exchange
         kb = (
             F.broadcast(keep)
-            if n_nodes0 * 8 < _bcast_thresh(spark)
+            if n_nodes0 * 8 < broadcast_threshold(spark)
             else keep
         )
         cur = (
@@ -571,7 +557,7 @@ def graph_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-round checkpoint stays: dist has TWO consumers per round (the
     # join and the union), so eliding the cut would re-execute the chain
     # 2^K times.
-    small = n * 16 < _bcast_thresh(spark)
+    small = n * 16 < broadcast_threshold(spark)
 
     def mb(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df

@@ -41,6 +41,7 @@ from ..functions.text import (
     uniq_ratio,
 )
 from ..operators import dedup as dd
+from ..io.cache import query_data
 from ..io.readers import load_table
 from .registry import register
 
@@ -477,24 +478,19 @@ def simhash_pairs_wide_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # minhash_lsh_pairs_q and dedup_clusters_q share the signature+candidate
 # pipeline; materialize the pair relation once per session+scale.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@query_data
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIRS_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = dd.minhash_lsh_pairs(
-            docs,
-            "doc_id",
-            "text",
-            n=SHINGLE_N,
-            num_perm=NUM_PERM,
-            bands=BANDS,
-            threshold=JACCARD_THRESHOLD,
-        )
-        _PAIRS_CACHE[key] = pairs.localCheckpoint(eager=True)
-    return _PAIRS_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dd.minhash_lsh_pairs(
+        docs,
+        "doc_id",
+        "text",
+        n=SHINGLE_N,
+        num_perm=NUM_PERM,
+        bands=BANDS,
+        threshold=JACCARD_THRESHOLD,
+    )
+    return pairs.localCheckpoint(eager=True)
 
 
 @register(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.cache import query_data
 from ..operators.resolve import resolve_post_ids, resolved_activities
 from ..sources.activity import LANGS, load_activities
 from .registry import register
@@ -151,11 +152,6 @@ def reply_post_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Resolved-activity cache — same rationale as sources.activity._ACTS_CACHE:
-# the resolution fixpoint is iterative, run it once per session+scale.
-_RESOLVED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 #: The only columns any _resolved consumer reads (task1 windows, task2
 #: activity counts, post_thread_children). Checkpointing just these makes
 #: the second materialization ~5 narrow columns instead of the full
@@ -164,14 +160,12 @@ _RESOLVED_CACHE: dict[tuple[str, str], DataFrame] = {}
 _RESOLVED_COLS = ("kind", "id", "person_id", "ts_ms", "post_id")
 
 
+@query_data
 def _resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RESOLVED_CACHE:
-        df = resolved_activities(load_activities(spark, sf_dir))
-        _RESOLVED_CACHE[key] = df.select(*_RESOLVED_COLS).localCheckpoint(
-            eager=True
-        )
-    return _RESOLVED_CACHE[key]
+    """The resolved activity stream: the resolution fixpoint is iterative,
+    so it runs once per session + scale."""
+    df = resolved_activities(load_activities(spark, sf_dir))
+    return df.select(*_RESOLVED_COLS).localCheckpoint(eager=True)
 
 
 def _task1_counts(spark: SparkSession, sf_dir: str, kind: str, out: str) -> DataFrame:

@@ -1254,6 +1254,59 @@ def _o_kmeans() -> str:
     """
 
 
+def _list_form_seeds(emb: DataFrame, where: str):
+    """(elq, cent0l, min coordinate) of the list-form k-means assignment:
+    the quantized vectors (vec_id, q) materialized, and the stride-seed
+    centroids (cid, cl). The size guard drops NULL/empty embeddings. One
+    precondition scan counts the stride knob's population — ADVICE r7:
+    the SAME population the oracle's knobs CTE counts, distinct vec_id
+    after that guard — and fails loudly unless every vector has DIM
+    elements: the unrolled distance reads element_at(q, 1..DIM), which
+    ANSI mode would fail deep inside the job on a short vector."""
+    elq = (
+        emb.select(
+            "vec_id",
+            F.expr(
+                f"transform(embedding, x -> cast(floor(cast(x AS double)"
+                f" * {KM_Q}) AS bigint))"
+            ).alias("q"),
+        )
+        .filter(F.size("q") > 0)
+        .localCheckpoint(eager=True)
+    )
+    st = elq.agg(
+        F.countDistinct("vec_id").alias("n"),
+        F.min(F.array_min("q")).alias("mn"),
+        F.min(F.size("q")).alias("dmin"),
+        F.max(F.size("q")).alias("dmax"),
+    ).collect()[0]
+    if st["dmin"] is not None and not st["dmin"] == st["dmax"] == DIM:
+        raise ValueError(
+            f"{where}: every embedding must have DIM={DIM} elements, "
+            f"found lengths {st['dmin']}..{st['dmax']}"
+        )
+    stride = km_stride_for(int(st["n"]))
+    cent0l = elq.filter(F.col("vec_id") % stride == 0).select(
+        F.col("vec_id").alias("cid"),
+        F.expr(f"transform(q, v -> v * {KM_S})").alias("cl"),
+    )
+    return elq, cent0l, st["mn"]
+
+
+def _sq_dist():
+    """Unrolled DIM-term squared distance of q (scaled by KM_S) to cl, the
+    oracle's d1e shape: element_at is whole-stage-codegen'd where
+    zip_with/aggregate lambdas are interpreted per element — measured 2×
+    faster."""
+    return F.expr(
+        " + ".join(
+            f"(element_at(q, {i}) * {KM_S} - element_at(cl, {i}))"
+            f" * (element_at(q, {i}) * {KM_S} - element_at(cl, {i}))"
+            for i in range(1, DIM + 1)
+        )
+    )
+
+
 @register(
     "kmeans_lloyd_sizes",
     oracle=_o_kmeans(),
@@ -1277,11 +1330,12 @@ def kmeans_lloyd_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     N^1.5·dim — a third dynamic-oracle query alongside the correlation
     and SimHash autos.
 
-    Scale shape: per round, ONE equi-join on the dimension index
-    (el ⋈ centroids: N·dim·K rows, partially aggregated map-side to
-    N·K distances) and one (cid, i)-keyed update aggregation — the
-    standard data-parallel Lloyd decomposition; K·dim (the centroid
-    relation) broadcasts. Lineage is cut per round in the production
+    Scale shape: per round, one broadcast nested-loop join of the N
+    list-form vectors against the K centroid lists (N·K rows, each
+    carrying one unrolled DIM-term distance) reduced to an argmin per
+    vector, and one (cid, i)-keyed update aggregation — the standard
+    data-parallel Lloyd decomposition; the K-row centroid relation
+    broadcasts. Lineage is cut per round in the production
     operator (localCheckpoint); 2 unrolled rounds here keep the oracle a
     pure CTE chain. Empty clusters keep their previous centroid
     (coalesce), matching `kmeans_refine`."""
@@ -1291,58 +1345,23 @@ def kmeans_lloyd_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old row-form assign exploded to N·dim rows and pushed N·K·dim rows
     # (~180M at sf0.1, 6.5e9 at 100×) through the join+aggregate; the
     # vector stays an array<bigint>, the broadcast nested-loop join
-    # produces only N·K rows, and the 64-term distance folds in ONE
-    # codegen'd zip_with/aggregate per row. Null/short-vector edge cases
-    # now poison the distance to NULL exactly like the oracle's unrolled
-    # `+` chain (the row form silently skipped them; no such rows exist
-    # in any testdata).
-    elq = (
-        emb.select(
-            "vec_id",
-            F.expr(
-                f"transform(embedding, x -> cast(floor(cast(x AS double)"
-                f" * {KM_Q}) AS bigint))"
-            ).alias("q"),
-        )
-        .filter(F.size("q") > 0)
-        .localCheckpoint(eager=True)
-    )
-    # ADVICE r7: the stride knob must count the SAME population the
-    # oracle's knobs CTE counts — distinct vec_id AFTER the explode (a
-    # NULL/empty embedding row exists pre-explode only; the size guard
-    # above drops exactly those). Same pass also guards the
-    # floor-vs-truncate neutralization precondition: the centroid-update
-    # shift keeps numerators non-negative only while every coordinate
-    # satisfies xf >= -KM_Q (x >= -1); below that the two division
-    # semantics silently diverge, so fail loudly instead.
-    st = elq.agg(
-        F.countDistinct("vec_id").alias("n"),
-        F.min(F.array_min("q")).alias("mn"),
-    ).collect()[0]
-    if st["mn"] is not None and int(st["mn"]) < -KM_Q:
+    # produces only N·K rows, and the 64-term distance is ONE unrolled
+    # element_at expression per row (`_sq_dist`).
+    elq, cent0l, mn = _list_form_seeds(emb, "kmeans_lloyd_sizes")
+    # The same precondition scan guards the floor-vs-truncate
+    # neutralization: the centroid-update shift keeps numerators
+    # non-negative only while every coordinate satisfies xf >= -KM_Q
+    # (x >= -1); below that the two division semantics silently diverge,
+    # so fail loudly instead.
+    if mn is not None and int(mn) < -KM_Q:
         raise ArithmeticError(
-            f"kmeans_lloyd_sizes: coordinate {st['mn']}/{KM_Q} < -1.0 "
+            f"kmeans_lloyd_sizes: coordinate {mn}/{KM_Q} < -1.0 "
             "breaks the floor-vs-truncate division neutralization"
         )
-    stride = km_stride_for(int(st["n"]))
-    cent0l = elq.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.expr(f"transform(q, v -> v * {KM_S})").alias("cl"),
-    )
 
     def assign(centl: DataFrame) -> DataFrame:
-        # unrolled 64-term distance (the oracle's d1e shape): element_at
-        # is whole-stage-codegen'd where zip_with/aggregate lambdas are
-        # interpreted per element — measured 2× faster here
-        dist = F.expr(
-            " + ".join(
-                f"(element_at(q, {i}) * {KM_S} - element_at(cl, {i}))"
-                f" * (element_at(q, {i}) * {KM_S} - element_at(cl, {i}))"
-                for i in range(1, DIM + 1)
-            )
-        )
         d = elq.crossJoin(F.broadcast(centl)).select(
-            "vec_id", "cid", dist.alias("d")
+            "vec_id", "cid", _sq_dist().alias("d")
         )
         return d.groupBy("vec_id").agg(
             F.min(F.struct("d", "cid")).alias("a")
@@ -1493,34 +1512,10 @@ def sem_cluster_assign(emb: DataFrame) -> DataFrame:
     # instead of N·K·dim through a join+aggregate; the 64-term distance
     # is one codegen'd expression). The size guard drops exactly the
     # rows the old posexplode dropped (NULL/empty embeddings).
-    elq = (
-        emb.select(
-            "vec_id",
-            F.expr(
-                f"transform(embedding, x -> cast(floor(cast(x AS double)"
-                f" * {KM_Q}) AS bigint))"
-            ).alias("q"),
-        )
-        .filter(F.size("q") > 0)
-        .localCheckpoint(eager=True)
-    )
-    stride = km_stride_for(
-        int(elq.agg(F.countDistinct("vec_id")).collect()[0][0])
-    )
-    cent0l = elq.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.expr(f"transform(q, v -> v * {KM_S})").alias("cl"),
-    )
-    dist = F.expr(
-        " + ".join(
-            f"(element_at(q, {i}) * {KM_S} - element_at(cl, {i}))"
-            f" * (element_at(q, {i}) * {KM_S} - element_at(cl, {i}))"
-            for i in range(1, DIM + 1)
-        )
-    )
+    elq, cent0l, _ = _list_form_seeds(emb, "sem_cluster_assign")
     return (
         elq.crossJoin(F.broadcast(cent0l))
-        .select("vec_id", "cid", dist.alias("d"))
+        .select("vec_id", "cid", _sq_dist().alias("d"))
         .groupBy("vec_id")
         .agg(F.min(F.struct("d", "cid")).alias("a"))
         .select("vec_id", F.col("a.cid").alias("cid"))

@@ -68,3 +68,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (a size-suffixed
+    value falls back to 10 MiB). The loop operators (resolve, the forest
+    walk, the graph loops) compare their measured relation sizes to it:
+    checkpointed-RDD relations carry no statistics, so Catalyst cannot
+    make the broadcast choice itself (guide §3.1)."""
+    try:
+        return int(
+            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        )
+    except ValueError:
+        return 10 * 1024 * 1024

@@ -38,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io.readers import load_table
+from ..io.cache import query_data, table_meta
+from ..io.readers import load_table, spread_scan
 from ..schemas import (
     KIND_COMMENT,
     KIND_LIKE,
@@ -152,19 +153,22 @@ def parse_activities(lines: DataFrame, value_col: str = "value") -> DataFrame:
 # ---------------------------------------------------------------------------
 # Deterministic fixture synthesis from the driver testdata
 
-# Catalog statistics (row counts, event_id density) now come from the
-# shared per-table stats cache (io/stats.py) — immutable properties of the
-# read-only testdata, NOT cleared by plans.clear_plan_caches (which scopes
-# to materialized DATA, not stats).
-
-
 def _table_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int, int, int]:
-    """(n_docs, n_events, min_event_id, max_event_id), computed once."""
+    """(n_docs, n_events, min_event_id, max_event_id): catalog statistics
+    from io/stats.py, table metadata in the session cache (io/cache.py)."""
     from ..io.stats import table_stats
 
     ev = table_stats(spark, sf_dir, "events")
     n_docs = table_stats(spark, sf_dir, "documents")["n"]
     return (n_docs, ev["n"], ev["min_event_id"], ev["max_event_id"])
+
+
+@table_meta
+def _spread_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's scan fanned out by spread_scan; table metadata, so the
+    narrow-or-wide probe (``.rdd`` partition count, a full plan analysis)
+    runs once per session and table version, not once per query."""
+    return spread_scan(load_table(spark, sf_dir, name))
 
 
 def synth_base(
@@ -195,15 +199,7 @@ def synth_base(
     # consume with maxFilesPerTrigger=1, so fanning the synth out 32-wide
     # multiplied the written file count and therefore the micro-batch
     # count ~32x (each with a durable-state commit).
-    ev = load_table(spark, sf_dir, "events")
-    if spread:
-        from ..io.readers import spread_scan
-
-        # keyed: the narrow-or-wide probe (.rdd partition count, a full
-        # plan analysis) runs once per session+table, not once per query
-        ev = spread_scan(
-            ev, (spark.sparkContext.applicationId, sf_dir, "events")
-        )
+    ev = (_spread_table if spread else load_table)(spark, sf_dir, "events")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     e = F.col("event_id")
     m = e % 10
@@ -351,25 +347,19 @@ def synth_activity_lines(
     return posts.unionByName(comments).unionByName(likes)
 
 
-# Parsed-activity cache: every social query starts from the same parsed
-# stream; materialize it once per (session, sf_dir). Keyed by applicationId
-# so a fresh SparkSession never sees another session's plan.
-_ACTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@query_data
 def load_activities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The parsed synthetic activity stream (wire-format round trip),
     materialized once per session+scale (persist + localCheckpoint frees
-    every downstream query from re-running the synth sort and the parse)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ACTS_CACHE:
-        # Single-pass parse (CASE dispatch, no per-kind branch re-execution)
-        # means synth→parse pipelines into ONE job and one materialization;
-        # the synth union's three branches each scan events once inside it.
-        _ACTS_CACHE[key] = parse_activities(
-            synth_activity_lines(spark, sf_dir, spread=True)
-        ).localCheckpoint(eager=True)
-    return _ACTS_CACHE[key]
+    every downstream query from re-running the synth sort and the parse).
+    Every social query starts from this stream, so it is query data in the
+    session cache (io/cache.py)."""
+    # Single-pass parse (CASE dispatch, no per-kind branch re-execution)
+    # means synth→parse pipelines into ONE job and one materialization;
+    # the synth union's three branches each scan events once inside it.
+    return parse_activities(
+        synth_activity_lines(spark, sf_dir, spread=True)
+    ).localCheckpoint(eager=True)
 
 
 def split_side_outputs(

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -349,6 +350,19 @@ def test_semantic_dedup_recall(spark, sf_dir):
     n = sum(sizes)
     chance = sum(s * (s - 1) for s in sizes) / (n * (n - 1))
     assert recall >= 4 * chance, (recall, chance)
+
+
+def test_sem_cluster_assign_rejects_wrong_dim(spark):
+    """A vector whose length is not DIM fails the precondition scan with
+    a ValueError naming DIM, not with an ANSI array-index error deep
+    inside the assignment job."""
+    from eth_dspa_2019_spark.plans.vectors import sem_cluster_assign
+
+    emb = spark.createDataFrame(
+        [(0, [0.1, 0.2, 0.3])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="DIM"):
+        sem_cluster_assign(emb)
 
 
 def test_leakage_safe_split_zero_cross_pairs(spark, sf_dir):

@@ -53,6 +53,7 @@ BNLJ_OK = {
     "ann_topk_sq8",  # broadcast quantized query set (N_QUERIES rows)
     "corpus_prep_e2e",  # 1-row corpus-total cross join
     "cosine_topk_bruteforce",  # broadcast query set x corpus (by design)
+    "kmeans_lloyd_sizes",  # broadcast K≈√N stride-seed centroid relation
     "doc_unigram_surprisal",  # 1-row total cross join
     "domain_mixture_sample",  # 1-row quota cross join
     "event_type_hour_chi2",  # 1-row N cross join
