@@ -49,14 +49,17 @@ from pyspark.sql.window import Window
 from ..operators.anomaly import FEATURES, HOUR_MS, Q
 from ..operators.prefix import global_running_sums
 from ..schemas import KIND_COMMENT, KIND_POST, KIND_REPLY
-from .durable import COMPACT_EVERY, DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _USERS_SCHEMA = "person_id long, s0 long, s1 long"
 _SUMS_SCHEMA = "feature string, s long, c long"
 _FLAGGED_SCHEMA = "ts_ms long, user_id long"
 
 
-class StreamingAnomalyDetector:
+class StreamingAnomalyDetector(DurableComponent):
+    user_state = table("users")
+    flagged = table("flagged")
+
     def __init__(self, spark: SparkSession, state_dir: str | None = None):
         self.spark = spark
         self.state = DurableTables(
@@ -64,41 +67,15 @@ class StreamingAnomalyDetector:
             state_dir,
             fulls={"users": _USERS_SCHEMA, "sums": _SUMS_SCHEMA},
             deltas={"flagged": _FLAGGED_SCHEMA},
+            on_reset=self._load_sums,
         )
-        self._adopt(self.state.load_latest())
-        self._since_compact = 0
 
-    def _adopt(self, tables: dict[str, DataFrame]) -> None:
-        self.user_state = tables["users"]
+    def _load_sums(self, tables: dict[str, DataFrame]) -> None:
         # feature -> [running_sum, running_count] (exact ints); 5 rows —
         # driver-side metadata, folded into each batch as literals
         self.sums = {f: [0, 0] for f in FEATURES}
         for r in tables["sums"].collect():
             self.sums[r["feature"]] = [r["s"], r["c"]]
-        self.flagged = tables["flagged"]
-        self._delta = self.flagged.limit(0)
-
-    # -- durability hooks -------------------------------------------------
-    def begin_batch(self, batch_id: int) -> None:
-        """Top of every foreachBatch: rolls state back one version when the
-        engine replays an already-committed batch (see `streaming/durable.py`)."""
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self._adopt(tables)
-            self._since_compact = 0
-
-    def commit(self, batch_id: int) -> None:
-        """Persist the post-batch state snapshot (no-op without state_dir)."""
-        sums_rows = [(f, int(s), int(c)) for f, (s, c) in self.sums.items()]
-        self.state.commit(
-            batch_id,
-            fulls={
-                "users": self.user_state,
-                "sums": self.spark.createDataFrame(sums_rows, _SUMS_SCHEMA),
-            },
-            deltas={"flagged": self._delta},
-            compacted={"flagged": self.flagged},
-        )
 
     # -- the fold ---------------------------------------------------------
     def _scored(self, acts: DataFrame, cache_registry: list | None = None) -> DataFrame:
@@ -194,15 +171,6 @@ class StreamingAnomalyDetector:
         newly = scored.filter(abnormal).select(
             "ts_ms", F.col("person_id").alias("user_id")
         ).transform(flat_checkpoint)
-        # O(batch) eager work: the delta checkpoints, the full set stays a
-        # lazy union compacted every COMPACT_EVERY batches (the in-memory
-        # mirror of the store's delta+compaction layout)
-        self.flagged = self.flagged.unionByName(newly)
-        self._delta = newly
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.flagged = self.flagged.transform(flat_checkpoint)
-            self._since_compact = 0
 
         # advance global sums (exact integer arithmetic) — one scalar agg
         # over the checkpointed scored frame
@@ -233,7 +201,12 @@ class StreamingAnomalyDetector:
             F.coalesce("b0", "s0").alias("s0"),
             F.coalesce("b1", F.when(F.col("b0").isNotNull(), F.col("s0")), F.col("s1")).alias("s1"),
         )
-        self.user_state = merged.transform(flat_checkpoint)
+        sums_rows = [(f, int(s), int(c)) for f, (s, c) in self.sums.items()]
+        self.state.fold({
+            "flagged": newly,
+            "users": merged.transform(flat_checkpoint),
+            "sums": self.spark.createDataFrame(sums_rows, _SUMS_SCHEMA),
+        })
         return newly
 
     def anomalies(self) -> DataFrame:

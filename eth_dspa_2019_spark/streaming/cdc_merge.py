@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .durable import DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, table
 
 _SNAP_SCHEMA = "key long, cents long"
 _CHANGE_SCHEMA = "op string, key long, cents long, seq long"
@@ -81,8 +81,10 @@ def _fold_changes(changes: DataFrame) -> DataFrame:
     )
 
 
-class StreamingSnapshotMerge:
+class StreamingSnapshotMerge(DurableComponent):
     """Folds keyed change micro-batches into a durable snapshot."""
+
+    snap = table("snap")
 
     def __init__(
         self,
@@ -91,35 +93,19 @@ class StreamingSnapshotMerge:
         state_dir: str | None = None,
     ):
         self.spark = spark
-        self._seed_src = snapshot
         self.state = DurableTables(
-            spark, state_dir, fulls={"snap": _SNAP_SCHEMA}, deltas={}
-        )
-        if self.state.committed_batch is not None:
-            self.snap = self.state.load_latest()["snap"]
-        elif snapshot is not None:
-            self.snap = snapshot.select("key", "cents").localCheckpoint(
-                eager=True
-            )
-        else:
-            self.snap = spark.createDataFrame([], _SNAP_SCHEMA)
-
-    def begin_batch(self, batch_id: int) -> None:
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            if self.state.committed_batch is None:
-                self.snap = (
-                    self._seed_src.select("key", "cents").localCheckpoint(
-                        eager=True
-                    )
-                    if self._seed_src is not None
-                    else self.spark.createDataFrame([], _SNAP_SCHEMA)
+            spark,
+            state_dir,
+            fulls={"snap": _SNAP_SCHEMA},
+            deltas={},
+            seed=None
+            if snapshot is None
+            else lambda: {
+                "snap": snapshot.select("key", "cents").localCheckpoint(
+                    eager=True
                 )
-            else:
-                self.snap = tables["snap"]
-
-    def commit(self, batch_id: int) -> None:
-        self.state.commit(batch_id, fulls={"snap": self.snap}, deltas={}, compacted={})
+            },
+        )
 
     def process_batch(self, changes: DataFrame) -> DataFrame:
         """Apply one micro-batch of (op, key, cents, seq) changes; returns
@@ -146,8 +132,8 @@ class StreamingSnapshotMerge:
                 .alias("cents"),
             )
         )
-        self.snap = untouched.unionByName(touched).localCheckpoint(
-            eager=True
+        self.state.fold(
+            {"snap": untouched.unionByName(touched).localCheckpoint(eager=True)}
         )
         return self.snap
 

@@ -38,7 +38,7 @@ from ..operators.dedup import (
     minhash_lsh_pairs,
 )
 from ..operators.forget import delete_id_col
-from .durable import COMPACT_EVERY, DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _KEYS_SCHEMA = "id long, key_hash long"
 _BANDS_SCHEMA = "id long, band_id int, band_key string"
@@ -46,9 +46,14 @@ _SHINGLES_SCHEMA = "id long, shingle string"
 _DELETED_SCHEMA = "doc_id long"
 
 
-class StreamingCorpusDedup:
+class StreamingCorpusDedup(DurableComponent):
     """Folds micro-batches of documents against the standing corpus
     state; optionally durable under ``state_dir``."""
+
+    keys = table("keys")
+    bands = table("bands")
+    shingles = table("shingles")
+    deleted = table("deleted")
 
     def __init__(
         self,
@@ -73,7 +78,6 @@ class StreamingCorpusDedup:
         )
         self.grow = grow
         self.self_dedup = self_dedup
-        self._corpus_src = corpus
         self.state = DurableTables(
             spark,
             state_dir,
@@ -87,80 +91,24 @@ class StreamingCorpusDedup:
                 # anti-join on it and physically purged at compaction
                 "deleted": _DELETED_SCHEMA,
             },
+            # the first commit's compaction also captures the seed
+            # corpus, so recovery never re-hashes it
+            seed=None if corpus is None else lambda: self._seed_from(corpus),
+            live={t: self._active for t in ("keys", "bands", "shingles")},
         )
-        self._since_compact = 0
-        if self.state.committed_batch is not None:
-            self._adopt(self.state.load_latest())
-        else:
-            self._seed()
 
-    def _seed(self) -> None:
-        """(Re)build the standing state from the seed corpus — runs when
-        no committed snapshot exists (first start, or rollback past v0)."""
-        self.deleted = self.spark.createDataFrame([], _DELETED_SCHEMA)
-        if self._corpus_src is None:
-            self.keys = self.spark.createDataFrame([], _KEYS_SCHEMA)
-            self.bands = self.spark.createDataFrame([], _BANDS_SCHEMA)
-            self.shingles = self.spark.createDataFrame([], _SHINGLES_SCHEMA)
-        else:
-            p = self.params
-            k, b, sh = corpus_dedup_artifacts(
-                self._corpus_src, p["id_col"], p["text_col"],
-                n=p["n"], num_perm=p["num_perm"], bands=p["bands"],
-                prefix=p["prefix"],
-            )
-            self.keys = k.transform(flat_checkpoint)
-            self.bands = b.transform(flat_checkpoint)
-            self.shingles = sh.transform(flat_checkpoint)
-        self._empty_deltas()
-
-    def _adopt(self, tables: dict[str, DataFrame]) -> None:
-        self.keys = tables["keys"]
-        self.bands = tables["bands"]
-        self.shingles = tables["shingles"]
-        self.deleted = tables["deleted"]
-        self._empty_deltas()
-
-    def _empty_deltas(self) -> None:
-        self._delta = {
-            "keys": self.keys.limit(0),
-            "bands": self.bands.limit(0),
-            "shingles": self.shingles.limit(0),
-            "deleted": self.deleted.limit(0),
+    def _seed_from(self, corpus: DataFrame) -> dict[str, DataFrame]:
+        """The standing artifacts of the seed corpus."""
+        p = self.params
+        k, b, sh = corpus_dedup_artifacts(
+            corpus, p["id_col"], p["text_col"], n=p["n"],
+            num_perm=p["num_perm"], bands=p["bands"], prefix=p["prefix"],
+        )
+        return {
+            "keys": k.transform(flat_checkpoint),
+            "bands": b.transform(flat_checkpoint),
+            "shingles": sh.transform(flat_checkpoint),
         }
-
-    # -- durability hooks -------------------------------------------------
-    def begin_batch(self, batch_id: int) -> None:
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self._since_compact = 0
-            if self.state.committed_batch is None:
-                self._seed()  # rolled back past the first commit
-            else:
-                self._adopt(tables)
-        else:
-            # fresh staging area; folds MERGE into it (unionByName) so a
-            # delete and an ingest in one begin/commit cycle both persist
-            self._empty_deltas()
-
-    def commit(self, batch_id: int) -> None:
-        """Persist this batch's kept-doc artifacts as the version deltas.
-        The first commit's compaction also captures the seed corpus, so
-        recovery never re-hashes it."""
-        self.state.commit(
-            batch_id,
-            fulls={},
-            deltas=self._delta,
-            compacted={
-                # compactions persist the PURGED artifacts (tombstones
-                # applied) — physical deletion rides the existing
-                # compaction cadence, the log-structured delete shape
-                "keys": self._active(self.keys, "id"),
-                "bands": self._active(self.bands, "id"),
-                "shingles": self._active(self.shingles, "id"),
-                "deleted": self.deleted,
-            },
-        )
 
     def _fold_within_batch(
         self, new_docs: DataFrame, scored: DataFrame
@@ -209,7 +157,7 @@ class StreamingCorpusDedup:
             )
         )
 
-    def _active(self, df: DataFrame, idc: str) -> DataFrame:
+    def _active(self, df: DataFrame) -> DataFrame:
         """A standing artifact with tombstones applied — every read goes
         through this view, so deletion is visible immediately while the
         physical purge waits for compaction. The tombstone side
@@ -217,7 +165,7 @@ class StreamingCorpusDedup:
         map-side probe."""
         return df.join(
             F.broadcast(self.deleted),
-            df[idc] == self.deleted["doc_id"],
+            df["id"] == self.deleted["doc_id"],
             "left_anti",
         )
 
@@ -232,25 +180,7 @@ class StreamingCorpusDedup:
             .distinct()
             .transform(flat_checkpoint)
         )
-        # merge, don't overwrite: an ingest fold staged earlier in this
-        # same batch keeps its artifact deltas in the durable log
-        self._delta["deleted"] = self._delta["deleted"].unionByName(d)
-        self.deleted = self.deleted.unionByName(d)
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            # flat_checkpoint, not raw localCheckpoint: the anti-join
-            # plan's preserved stats would re-seed the geometric
-            # sizeInBytes blowup the r8 soak caught (durable.py docstring)
-            self.keys = self._active(self.keys, "id").transform(
-                flat_checkpoint
-            )
-            self.bands = self._active(self.bands, "id").transform(
-                flat_checkpoint
-            )
-            self.shingles = self._active(self.shingles, "id").transform(
-                flat_checkpoint
-            )
-            self._since_compact = 0
+        self.state.fold({"deleted": d})
 
     # -- the fold ---------------------------------------------------------
     def process_batch(self, new_docs: DataFrame) -> DataFrame:
@@ -261,9 +191,9 @@ class StreamingCorpusDedup:
         new_docs = new_docs.transform(flat_checkpoint)
         caches: list[DataFrame] = []
         scored = incremental_dedup_against(
-            self._active(self.keys, "id"),
-            self._active(self.bands, "id"),
-            self._active(self.shingles, "id"),
+            self.state.live("keys"),
+            self.state.live("bands"),
+            self.state.live("shingles"),
             new_docs,
             p["id_col"], p["text_col"], n=p["n"], num_perm=p["num_perm"],
             bands=p["bands"], threshold=p["threshold"], prefix=p["prefix"],
@@ -275,7 +205,6 @@ class StreamingCorpusDedup:
         for c in caches:
             c.unpersist()
         if not self.grow:
-            # nothing to stage; leave any delete delta from this batch
             return scored
         kept = new_docs.join(
             scored.filter(F.col("keep")).select(
@@ -287,25 +216,12 @@ class StreamingCorpusDedup:
             kept, p["id_col"], p["text_col"], n=p["n"],
             num_perm=p["num_perm"], bands=p["bands"], prefix=p["prefix"],
         )
-        # O(batch) eager work: only the kept delta checkpoints; the
-        # standing tables stay lazy unions compacted every COMPACT_EVERY
-        # batches (the in-memory mirror of the store's layout). Merge
-        # into any delta staged earlier this batch (e.g. a delete fold).
-        dk = dk.transform(flat_checkpoint)
-        db = db.transform(flat_checkpoint)
-        dsh = dsh.transform(flat_checkpoint)
-        self._delta["keys"] = self._delta["keys"].unionByName(dk)
-        self._delta["bands"] = self._delta["bands"].unionByName(db)
-        self._delta["shingles"] = self._delta["shingles"].unionByName(dsh)
-        self.keys = self.keys.unionByName(dk)
-        self.bands = self.bands.unionByName(db)
-        self.shingles = self.shingles.unionByName(dsh)
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.keys = self.keys.transform(flat_checkpoint)
-            self.bands = self.bands.transform(flat_checkpoint)
-            self.shingles = self.shingles.transform(flat_checkpoint)
-            self._since_compact = 0
+        # O(batch) eager work: only the kept delta checkpoints
+        self.state.fold({
+            "keys": dk.transform(flat_checkpoint),
+            "bands": db.transform(flat_checkpoint),
+            "shingles": dsh.transform(flat_checkpoint),
+        })
         return scored
 
 

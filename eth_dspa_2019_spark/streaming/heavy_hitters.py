@@ -39,13 +39,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .durable import DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _COUNTERS_SCHEMA = "key long, cnt long, err long"
 
 
-class StreamingHeavyHitters:
+class StreamingHeavyHitters(DurableComponent):
     """Folds keyed micro-batches into a k-row SpaceSaving summary."""
+
+    counters = table("counters")
 
     def __init__(
         self,
@@ -59,18 +61,6 @@ class StreamingHeavyHitters:
         self.key_col = key_col
         self.state = DurableTables(
             spark, state_dir, fulls={"counters": _COUNTERS_SCHEMA}, deltas={}
-        )
-        self.counters = self.state.load_latest()["counters"]
-
-    # -- durability hooks -------------------------------------------------
-    def begin_batch(self, batch_id: int) -> None:
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self.counters = tables["counters"]
-
-    def commit(self, batch_id: int) -> None:
-        self.state.commit(
-            batch_id, fulls={"counters": self.counters}, deltas={}, compacted={}
         )
 
     # -- the fold ---------------------------------------------------------
@@ -106,11 +96,11 @@ class StreamingHeavyHitters:
                 .alias("err"),
             )
         )
-        self.counters = (
-            merged.orderBy(F.col("cnt").desc(), "key")
+        self.state.fold({
+            "counters": merged.orderBy(F.col("cnt").desc(), "key")
             .limit(self.k)
             .transform(flat_checkpoint)
-        )
+        })
         return self.counters
 
     def topk(self, n: int | None = None) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h64
 from ..plans.pipeline import NEG_BUCKETS, NEG_PROBES
-from .durable import COMPACT_EVERY, DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _SILVER_SCHEMA = "doc_id long, dkey string, hv long, bucket long"
 _CHAMP_SCHEMA = "bucket long, rep_doc_id long, rep_hv long, rep_dkey string"
@@ -50,9 +50,12 @@ def _batch_silver(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-class StreamingNegativeSampling:
+class StreamingNegativeSampling(DurableComponent):
     """Folds micro-batches of documents into the standing champion
     dimension + silver table; optionally durable under ``state_dir``."""
+
+    champions = table("champions")
+    silver = table("silver")
 
     def __init__(
         self,
@@ -70,44 +73,6 @@ class StreamingNegativeSampling:
             state_dir,
             fulls={"champions": _CHAMP_SCHEMA},
             deltas={"silver": _SILVER_SCHEMA},
-        )
-        self._since_compact = 0
-        if self.state.committed_batch is not None:
-            self._adopt(self.state.load_latest())
-        else:
-            self._seed()
-
-    def _seed(self) -> None:
-        self.champions = self.spark.createDataFrame([], _CHAMP_SCHEMA)
-        self.silver = self.spark.createDataFrame([], _SILVER_SCHEMA)
-        self._empty_delta()
-
-    def _adopt(self, tables: dict[str, DataFrame]) -> None:
-        self.champions = tables["champions"]
-        self.silver = tables["silver"]
-        self._empty_delta()
-
-    def _empty_delta(self) -> None:
-        self._delta = {"silver": self.silver.limit(0)}
-
-    # -- durability hooks -------------------------------------------------
-    def begin_batch(self, batch_id: int) -> None:
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self._since_compact = 0
-            if self.state.committed_batch is None:
-                self._seed()
-            else:
-                self._adopt(tables)
-        else:
-            self._empty_delta()
-
-    def commit(self, batch_id: int) -> None:
-        self.state.commit(
-            batch_id,
-            fulls={"champions": self.champions},
-            deltas=self._delta,
-            compacted={"silver": self.silver},
         )
 
     # -- the fold ---------------------------------------------------------
@@ -138,13 +103,7 @@ class StreamingNegativeSampling:
             )
             .transform(flat_checkpoint)
         )
-        self.champions = merged
-        self._delta["silver"] = self._delta["silver"].unionByName(s)
-        self.silver = self.silver.unionByName(s)
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.silver = self.silver.transform(flat_checkpoint)
-            self._since_compact = 0
+        self.state.fold({"champions": merged, "silver": s})
 
     # -- the epoch probe pass ---------------------------------------------
     def close_epoch(self) -> DataFrame:

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h64
 from ..plans.llm import PARA_KEY, PARA_W
 from ..operators.forget import delete_id_col
-from .durable import COMPACT_EVERY, DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _PARAS_SCHEMA = "doc_id long, ph long"  # keeper doc id = retraction provenance
 _DELETED_SCHEMA = "doc_id long"
@@ -58,9 +58,12 @@ def _batch_paragraphs(new_docs: DataFrame, id_col: str, text_col: str) -> DataFr
     )
 
 
-class StreamingParagraphDedup:
+class StreamingParagraphDedup(DurableComponent):
     """Folds micro-batches of documents against the standing
     paragraph-hash set; optionally durable under ``state_dir``."""
+
+    paras = table("paras")
+    deleted = table("deleted")
 
     def __init__(
         self,
@@ -81,35 +84,12 @@ class StreamingParagraphDedup:
             # standing paragraph set is read through an anti-join on it
             # (by KEEPER doc id) and physically purged at compaction
             deltas={"paras": _PARAS_SCHEMA, "deleted": _DELETED_SCHEMA},
-        )
-        self._since_compact = 0
-        if self.state.committed_batch is not None:
-            self._adopt(self.state.load_latest())
-        else:
-            self._seed()
-
-    def _seed(self) -> None:
-        self.paras = self.spark.createDataFrame([], _PARAS_SCHEMA)
-        self.deleted = self.spark.createDataFrame([], _DELETED_SCHEMA)
-        self._empty_deltas()
-
-    def _adopt(self, tables: dict[str, DataFrame]) -> None:
-        self.paras = tables["paras"]
-        self.deleted = tables["deleted"]
-        self._empty_deltas()
-
-    def _empty_deltas(self) -> None:
-        self._delta = {
-            "paras": self.paras.limit(0),
-            "deleted": self.deleted.limit(0),
-        }
-
-    def _active(self) -> DataFrame:
-        """The standing paragraph set with tombstones applied (keeper-id
-        anti-join, broadcast delete side) — a forgotten document's
-        paragraphs stop screening immediately."""
-        return self.paras.join(
-            F.broadcast(self.deleted), "doc_id", "left_anti"
+            # a forgotten document's paragraphs stop screening at once
+            live={
+                "paras": lambda df: df.join(
+                    F.broadcast(self.deleted), "doc_id", "left_anti"
+                )
+            },
         )
 
     def delete_batch(self, ids: DataFrame) -> None:
@@ -132,39 +112,7 @@ class StreamingParagraphDedup:
             .distinct()
             .transform(flat_checkpoint)
         )
-        # merge, don't overwrite: a paragraph fold staged earlier in this
-        # same batch keeps its paras delta in the durable log
-        self._delta["deleted"] = self._delta["deleted"].unionByName(d)
-        self.deleted = self.deleted.unionByName(d)
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.paras = self._active().transform(flat_checkpoint)
-            self._since_compact = 0
-
-    # -- durability hooks -------------------------------------------------
-    def begin_batch(self, batch_id: int) -> None:
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self._since_compact = 0
-            if self.state.committed_batch is None:
-                self._seed()
-            else:
-                self._adopt(tables)
-        else:
-            # fresh staging area; folds MERGE into it (unionByName) so a
-            # delete and an ingest in one begin/commit cycle both persist
-            self._empty_deltas()
-
-    def commit(self, batch_id: int) -> None:
-        self.state.commit(
-            batch_id,
-            fulls={},
-            deltas=self._delta,
-            compacted={
-                "paras": self._active(),  # compactions persist purged
-                "deleted": self.deleted,
-            },
-        )
+        self.state.fold({"deleted": d})
 
     # -- the fold ---------------------------------------------------------
     def process_batch(self, new_docs: DataFrame) -> DataFrame:
@@ -179,7 +127,7 @@ class StreamingParagraphDedup:
             F.col("okey") == F.col("wkey")
         )
         kept = first_in_batch.join(
-            self._active().select("ph"), "ph", "left_anti"
+            self.state.live("paras").select("ph"), "ph", "left_anti"
         ).transform(flat_checkpoint)
         # every batch doc appears in the output, even fully-deduped ones
         agg = kept.groupBy("doc_id").agg(
@@ -209,14 +157,8 @@ class StreamingParagraphDedup:
             )
             .transform(flat_checkpoint)
         )
-        # merge into any delta staged earlier this batch (delete fold)
         dp = kept.select("doc_id", "ph").distinct().transform(flat_checkpoint)
-        self._delta["paras"] = self._delta["paras"].unionByName(dp)
-        self.paras = self.paras.unionByName(dp)
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.paras = self.paras.transform(flat_checkpoint)
-            self._since_compact = 0
+        self.state.fold({"paras": dp})
         return out
 
 

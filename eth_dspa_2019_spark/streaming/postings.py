@@ -25,16 +25,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.forget import delete_id_col
-from .durable import COMPACT_EVERY, DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _TF_SCHEMA = "doc_id long, tok string, tf long"
 _DL_SCHEMA = "doc_id long, dl long"
 _DEL_SCHEMA = "doc_id long"
 
 
-class StreamingPostingsIndex:
+class StreamingPostingsIndex(DurableComponent):
     """Folds micro-batches of (doc_id, text) into a durable inverted
     index; ``search()`` scores the standing index with BM25."""
+
+    tf = table("tf")
+    dl = table("dl")
+    deleted = table("del")
 
     def __init__(self, spark: SparkSession, state_dir: str | None = None):
         self.spark = spark
@@ -46,60 +50,9 @@ class StreamingPostingsIndex:
             # append-only doc-id deletes; search reads the postings
             # through an anti-join on it and compaction purges physically
             deltas={"tf": _TF_SCHEMA, "dl": _DL_SCHEMA, "del": _DEL_SCHEMA},
-        )
-        self._since_compact = 0
-        if self.state.committed_batch is not None:
-            self._adopt(self.state.load_latest())
-        else:
-            self._seed()
-
-    def _seed(self) -> None:
-        self.tf = self.spark.createDataFrame([], _TF_SCHEMA)
-        self.dl = self.spark.createDataFrame([], _DL_SCHEMA)
-        self.deleted = self.spark.createDataFrame([], _DEL_SCHEMA)
-        self._empty_deltas()
-
-    def _adopt(self, tables: dict[str, DataFrame]) -> None:
-        self.tf = tables["tf"]
-        self.dl = tables["dl"]
-        self.deleted = tables["del"]
-        self._empty_deltas()
-
-    def _empty_deltas(self) -> None:
-        self._delta = {
-            "tf": self.tf.limit(0),
-            "dl": self.dl.limit(0),
-            "del": self.deleted.limit(0),
-        }
-
-    def begin_batch(self, batch_id: int) -> None:
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self._since_compact = 0
-            if self.state.committed_batch is None:
-                self._seed()
-            else:
-                self._adopt(tables)
-        else:
-            # fresh staging area for this batch; folds MERGE into it
-            # (unionByName), so an ingest and a delete in the same
-            # begin/commit cycle both reach the durable log
-            self._empty_deltas()
-
-    def commit(self, batch_id: int) -> None:
-        self.state.commit(
-            batch_id,
-            fulls={},
-            deltas=self._delta,
-            # compactions persist the PURGED postings (tombstones
-            # applied) — physical deletion rides the compaction cadence,
-            # exactly a log-structured index segment merge dropping
-            # deleted docs
-            compacted={
-                "tf": self._live(self.tf),
-                "dl": self._live(self.dl),
-                "del": self.deleted,
-            },
+            # compaction keeps the PURGED postings — physical deletion is
+            # a log-structured index segment merge dropping deleted docs
+            live={"tf": self._live, "dl": self._live},
         )
 
     def process_batch(self, docs: DataFrame) -> None:
@@ -118,18 +71,7 @@ class StreamingPostingsIndex:
             .agg(F.count(F.lit(1)).alias("dl"))
             .transform(flat_checkpoint)
         )
-        # merge into any delta already staged this batch (e.g. an earlier
-        # delete_docs fold) — overwriting would drop its tombstones from
-        # the durable log and lose them on crash-recovery replay
-        self._delta["tf"] = self._delta["tf"].unionByName(d_tf)
-        self._delta["dl"] = self._delta["dl"].unionByName(d_dl)
-        self.tf = self.tf.unionByName(d_tf)
-        self.dl = self.dl.unionByName(d_dl)
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.tf = self.tf.transform(flat_checkpoint)
-            self.dl = self.dl.transform(flat_checkpoint)
-            self._since_compact = 0
+        self.state.fold({"tf": d_tf, "dl": d_dl})
 
     def _live(self, df: DataFrame) -> DataFrame:
         """A postings relation with tombstones applied — deletion is
@@ -148,15 +90,7 @@ class StreamingPostingsIndex:
             .distinct()
             .transform(flat_checkpoint)
         )
-        # merge, don't overwrite: an ingest fold staged earlier in this
-        # same batch keeps its tf/dl deltas in the durable log
-        self._delta["del"] = self._delta["del"].unionByName(d)
-        self.deleted = self.deleted.unionByName(d)
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.tf = self._live(self.tf).transform(flat_checkpoint)
-            self.dl = self._live(self.dl).transform(flat_checkpoint)
-            self._since_compact = 0
+        self.state.fold({"del": d})
 
     def search(self) -> DataFrame:
         """BM25 top-k over the standing index — the registered query's

@@ -34,7 +34,7 @@ from ..operators.recommend import (
     dynamic_similarity,
     recommendations,
 )
-from .durable import COMPACT_EVERY, DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _RECS_SCHEMA = (
     "window_end long, eigen_id long, rank int, rec_user_id long, "
@@ -42,9 +42,11 @@ _RECS_SCHEMA = (
 )
 
 
-class StreamingRecommender:
+class StreamingRecommender(DurableComponent):
     """Accumulates per-closed-window top-5 recommendations; optionally
     durable under ``state_dir`` (see module docstring)."""
+
+    recs = table("recs")
 
     def __init__(
         self,
@@ -59,29 +61,6 @@ class StreamingRecommender:
         self.state = DurableTables(
             spark, state_dir, fulls={}, deltas={"recs": _RECS_SCHEMA}
         )
-        self.recs: DataFrame = self.state.load_latest()["recs"]
-        self._delta = self.recs.limit(0)
-        self._since_compact = 0
-
-    # -- durability hooks -------------------------------------------------
-    def begin_batch(self, batch_id: int) -> None:
-        """Top of every foreachBatch: rolls back one version when the
-        engine replays an already-committed batch."""
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self.recs = tables["recs"]
-            self._delta = self.recs.limit(0)
-            self._since_compact = 0
-
-    def commit(self, batch_id: int) -> None:
-        """Persist this batch's newly-scored windows as the version delta
-        (no-op without state_dir)."""
-        self.state.commit(
-            batch_id,
-            fulls={},
-            deltas={"recs": self._delta},
-            compacted={"recs": self.recs},
-        )
 
     # -- the fold ---------------------------------------------------------
     def process_batch(self, counts: DataFrame) -> DataFrame:
@@ -89,22 +68,13 @@ class StreamingRecommender:
         watermark just closed. Returns this batch's recommendations."""
         counts = counts.transform(flat_checkpoint)
         if not counts.head(1):
-            self._delta = self.recs.limit(0)
-            return self._delta
+            return self.recs.limit(0)
         dyn = dynamic_similarity(counts, self.friends)
         windows = counts.select("window_end").distinct()
         newly = recommendations(self.static, dyn, windows).localCheckpoint(
             eager=True
         )
-        # O(batch) eager work: only the delta checkpoints; the full set is
-        # a lazy union compacted every COMPACT_EVERY batches (the
-        # in-memory mirror of the store's delta+compaction layout)
-        self.recs = self.recs.unionByName(newly)
-        self._delta = newly
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.recs = self.recs.transform(flat_checkpoint)
-            self._since_compact = 0
+        self.state.fold({"recs": newly})
         return newly
 
 

@@ -20,30 +20,12 @@ matters: a reply that arrives before its parent waits in ``pending`` with
 whatever progress its pointer made, until some later batch delivers the
 parent (or its transitively-resolved ancestor).
 
-Durability (O6): with ``state_dir`` set, the state tables persist as
-versioned parquet under the directory — one ``v{batch_id}`` snapshot per
-micro-batch, committed with a marker file AFTER the data lands. A restarted
-query recovers the newest committed snapshot; if Spark replays the last
-micro-batch (crash between the state commit and the engine's offset
-commit), the replayed ``batch_id`` is detected and the state ROLLS BACK
-one version first, so reprocessing is idempotent — the exactly-once story
-holds across process restarts, not just within one process (all filesystem
-access goes through the Hadoop FileSystem API, so any checkpoint-capable
-FS works). The reference's equivalent is the memcached store whose contents
-simply OUTLIVE the Flink job — durable only as long as an unrelated
-external process stays up.
-
-Snapshot I/O is O(batch), not O(history): the monotonically-growing
-``resolved`` table is persisted as per-batch DELTAS (exactly the mappings
-the batch resolved — the analog of the reference's memcached ``set`` calls,
-which also only ever ship the new edges, `PostIdResolver.java:63-96`),
-with a periodic FULL compaction every ``COMPACT_EVERY`` batches; recovery
-reads the newest compaction plus the committed deltas after it. The
-bounded working-set tables (``pending``, ``parked`` — sized by unresolved
-replies, not by history) are written full each batch. Versions older than
-the newest compaction at-or-below the previous batch are pruned, so at
-most ``COMPACT_EVERY + 1`` small delta dirs plus one full snapshot exist
-at any time, and the rollback target is always reconstructable.
+Durability (O6): with ``state_dir`` set, ``pending`` (plus the emit
+stage's ``parked`` reply rows) persists as full tables and ``resolved`` as
+per-batch deltas through the shared durable-state layer
+(`streaming/durable.py`: versioned snapshots, periodic compaction,
+rollback-on-replay), so the exactly-once story holds across process
+restarts.
 """
 
 from __future__ import annotations
@@ -52,192 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import KIND_COMMENT, KIND_REPLY
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _RESOLVED_SCHEMA = "id long, root_post_id long"
 _PENDING_SCHEMA = "id long, parent_id long"
 _PARKED_SCHEMA = "kind string, id long, person_id long, ts_ms long, parent_id long"
 # safety cap on doubling hops: 2^16 = 65 536-deep chains per single batch
 _MAX_HOPS = 16
-# full-compaction cadence for delta-persisted tables: amortizes the
-# O(history) rewrite to history/COMPACT_EVERY per batch while bounding
-# recovery reads to one full + <= COMPACT_EVERY deltas
-COMPACT_EVERY = 8
-
-
-def flat_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint that also DROPS the origin plan's estimated
-    statistics. Spark's ``localCheckpoint`` cuts lineage but PRESERVES
-    the checkpointed plan's stats, and join estimation multiplies child
-    sizeInBytes — so a streaming component whose per-batch delta plan
-    joins the standing state k times compounds the standing stats ×k
-    every batch. The sizeInBytes BigInteger's bit-length then grows
-    geometrically, and after ~a dozen batches Catalyst's
-    SizeInBytesOnlyStatsPlanVisitor spends MINUTES multiplying
-    million-bit integers on the driver (reproduced in the round-8
-    56-batch corpus-dedup soak: 8 s/batch through batch 10, 155 s at
-    batch 13, wedged at 14). Rebuilding the frame from the SAME
-    materialized internal RDD (zero recompute, no Python round-trip)
-    resets the leaf to the bounded default estimate, so per-batch stats
-    stay a few thousand bits forever. The reset also disables
-    auto-broadcast for these frames — standing state isn't
-    broadcastable at scale anyway, and the components hint
-    ``F.broadcast`` explicitly where they mean it.
-
-    CLASSIC-MODE ONLY: the stats strip reaches into py4j internals
-    (``_jdf``, ``internalCreateDataFrame`` — private[sql] API). Under
-    Spark Connect (no ``_jdf``) or if the private API moves, we fall
-    back to the plain eager localCheckpoint — correct, lineage still
-    cut, only the stats-reset optimization is lost."""
-    ck = df.localCheckpoint(eager=True)
-    spark = df.sparkSession
-    if not hasattr(ck, "_jdf") or not hasattr(spark, "_jsparkSession"):
-        return ck  # Spark Connect: no JVM handle on this side
-    try:
-        jdf = ck._jdf
-        stripped = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(stripped, spark)
-    except Exception:  # private API drifted across Spark versions
-        return ck
-
-
-
-class _StateStore:
-    """Versioned parquet snapshots under ``root`` with commit markers.
-
-    Layout per version dir ``root/v{batch_id}/``:
-
-    - ``{table}.parquet``         — full snapshot (bounded working sets),
-    - ``{table}__delta.parquet``  — this batch's additions (append-only
-      tables; the full content is the newest ``__full`` plus every
-      committed ``__delta`` after it),
-    - ``{table}__full.parquet``   — periodic compaction of an append-only
-      table (always present at the first committed version),
-    - ``_COMMITTED``              — marker written AFTER all data lands.
-
-    Only marker-bearing versions count. Pruning keeps every version at or
-    after the newest compaction at-or-below ``version - 1``, so both the
-    current version and the rollback target stay reconstructable."""
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root.rstrip("/")
-        self._jvm = spark._jvm
-        self._conf = spark._jsc.hadoopConfiguration()
-
-    def _jpath(self, rel: str = ""):
-        p = f"{self.root}/{rel}" if rel else self.root
-        return self._jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(self):
-        return self._jpath().getFileSystem(self._conf)
-
-    def committed_versions(self) -> list[int]:
-        fs = self._fs()
-        if not fs.exists(self._jpath()):
-            return []
-        out = []
-        for status in fs.listStatus(self._jpath()):
-            name = status.getPath().getName()
-            if (
-                status.isDirectory()
-                and name.startswith("v")
-                and name[1:].isdigit()
-                and fs.exists(self._jpath(f"{name}/_COMMITTED"))
-            ):
-                out.append(int(name[1:]))
-        return sorted(out)
-
-    def latest(self) -> int | None:
-        versions = self.committed_versions()
-        return versions[-1] if versions else None
-
-    def load(self, version: int | None, table: str, schema: str) -> DataFrame:
-        """Read one full state table at ``version`` (None / < 0 → empty).
-
-        A MISSING table at a committed version is an error, not an empty
-        frame: silently resetting state (e.g. a state_dir paired with the
-        wrong checkpoint, or a corrupted snapshot) would make the
-        exactly-once machinery emit wrong output with no signal."""
-        if version is None or version < 0:
-            return self.spark.createDataFrame([], schema)
-        rel = f"v{version}/{table}.parquet"
-        if not self._fs().exists(self._jpath(rel)):
-            raise FileNotFoundError(
-                f"state table '{table}' missing from committed snapshot "
-                f"{self.root}/v{version} — state_dir/checkpoint mismatch "
-                "or corrupted snapshot"
-            )
-        return self.spark.read.schema(schema).parquet(f"{self.root}/{rel}")
-
-    def _bases(self, table: str, upto: int) -> list[int]:
-        """Committed versions <= ``upto`` holding a compaction of ``table``."""
-        fs = self._fs()
-        return [
-            v
-            for v in self.committed_versions()
-            if v <= upto
-            and fs.exists(self._jpath(f"v{v}/{table}__full.parquet"))
-        ]
-
-    def load_chain(
-        self, version: int | None, table: str, schema: str
-    ) -> DataFrame:
-        """Reconstruct a delta-persisted table at ``version``: newest
-        compaction at-or-below it plus every committed delta after."""
-        if version is None or version < 0:
-            return self.spark.createDataFrame([], schema)
-        bases = self._bases(table, version)
-        if not bases:
-            raise FileNotFoundError(
-                f"no compaction of '{table}' at or below version {version} "
-                f"under {self.root} — state_dir/checkpoint mismatch or "
-                "corrupted snapshot"
-            )
-        base = bases[-1]
-        paths = [f"{self.root}/v{base}/{table}__full.parquet"] + [
-            f"{self.root}/v{v}/{table}__delta.parquet"
-            for v in self.committed_versions()
-            if base < v <= version
-        ]
-        return self.spark.read.schema(schema).parquet(*paths)
-
-    def save(
-        self,
-        version: int,
-        fulls: dict[str, DataFrame],
-        deltas: dict[str, DataFrame] | None = None,
-        compactions: dict[str, DataFrame] | None = None,
-    ) -> None:
-        """Write all tables for ``version`` (fulls as ``{t}.parquet``,
-        deltas as ``{t}__delta.parquet``, compactions additionally as
-        ``{t}__full.parquet``), then the commit marker, then prune
-        versions below the newest compaction at-or-below ``version - 1``."""
-        fs = self._fs()
-        vdir = self._jpath(f"v{version}")
-        if fs.exists(vdir):  # crashed/replayed attempt — start clean
-            fs.delete(vdir, True)
-        for table, df in fulls.items():
-            df.write.mode("overwrite").parquet(
-                f"{self.root}/v{version}/{table}.parquet"
-            )
-        for table, df in (deltas or {}).items():
-            df.write.mode("overwrite").parquet(
-                f"{self.root}/v{version}/{table}__delta.parquet"
-            )
-        for table, df in (compactions or {}).items():
-            df.write.mode("overwrite").parquet(
-                f"{self.root}/v{version}/{table}__full.parquet"
-            )
-        fs.create(self._jpath(f"v{version}/_COMMITTED"), True).close()
-        keep_floor = version - 1
-        for table in deltas or {}:
-            bases = self._bases(table, version - 1)
-            keep_floor = min(keep_floor, bases[-1] if bases else 0)
-        for old in self.committed_versions():
-            if old < keep_floor:
-                fs.delete(self._jpath(f"v{old}"), True)
 
 
 def _pruned_state_side(resolved_all: DataFrame, work: DataFrame) -> DataFrame:
@@ -249,84 +52,28 @@ def _pruned_state_side(resolved_all: DataFrame, work: DataFrame) -> DataFrame:
     return resolved_all.join(F.broadcast(ptrs), "id", "semi")
 
 
-class IncrementalResolver:
+class IncrementalResolver(DurableComponent):
     """Accumulates child→root mappings across micro-batches; optionally
-    durable under ``state_dir`` (see module docstring)."""
+    durable under ``state_dir`` (see module docstring). ``extra_fulls``
+    declares caller-owned full tables committed in the same snapshot."""
 
-    def __init__(self, spark: SparkSession, state_dir: str | None = None):
+    resolved = table("resolved")
+    pending = table("pending")
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        state_dir: str | None = None,
+        *,
+        extra_fulls: dict[str, str] | None = None,
+    ):
         self.spark = spark
-        self.store = _StateStore(spark, state_dir) if state_dir else None
-        self.committed_batch: int | None = None
-        # mappings resolved by the CURRENT batch — what commit() persists
-        # as the version's delta (O(batch) write, vs O(history) for the
-        # whole `resolved` table)
-        self._delta = spark.createDataFrame([], _RESOLVED_SCHEMA)
-        # batches since `resolved` was last compacted into one checkpoint
-        self._since_compact = 0
-        if self.store is not None:
-            v = self.store.latest()
-            self.committed_batch = v
-            self.resolved = self.store.load_chain(
-                v, "resolved", _RESOLVED_SCHEMA
-            )
-            self.pending = self.store.load(v, "pending", _PENDING_SCHEMA)
-        else:
-            self.resolved = spark.createDataFrame([], _RESOLVED_SCHEMA)
-            self.pending = spark.createDataFrame([], _PENDING_SCHEMA)
-
-    # -- durability hooks -------------------------------------------------
-    def begin_batch(self, batch_id: int) -> int | None:
-        """Call at the top of every foreachBatch. If the engine is
-        REPLAYING a batch whose state snapshot already committed (crash
-        after state commit, before offset commit), roll back to the prior
-        snapshot so reprocessing is idempotent. Returns the rolled-back
-        version (so the caller can restore its own extras from the same
-        snapshot), or None when no rollback happened."""
-        if self.store is None or self.committed_batch is None:
-            return None
-        if batch_id > self.committed_batch:
-            return None
-        prior = batch_id - 1
-        self.resolved = self.store.load_chain(
-            prior, "resolved", _RESOLVED_SCHEMA
+        self.state = DurableTables(
+            spark,
+            state_dir,
+            fulls={"pending": _PENDING_SCHEMA, **(extra_fulls or {})},
+            deltas={"resolved": _RESOLVED_SCHEMA},
         )
-        self.pending = self.store.load(prior, "pending", _PENDING_SCHEMA)
-        self.committed_batch = prior if prior >= 0 else None
-        self._since_compact = 0
-        return prior
-
-    def commit(
-        self, batch_id: int, extra: dict[str, DataFrame] | None = None
-    ) -> None:
-        """Persist the post-batch state (plus caller extras, atomically in
-        the same version snapshot). No-op without a state_dir.
-
-        ``resolved`` is written as this batch's DELTA; a full compaction
-        rides along every ``COMPACT_EVERY`` batches (and always on the
-        first committed version, so a recovery base exists)."""
-        if self.store is None:
-            return
-        fulls = {"pending": self.pending}
-        if extra:
-            fulls.update(extra)
-        compact = (
-            batch_id % COMPACT_EVERY == 0
-            or not self.store._bases("resolved", batch_id - 1)
-        )
-        self.store.save(
-            batch_id,
-            fulls,
-            deltas={"resolved": self._delta},
-            compactions={"resolved": self.resolved} if compact else None,
-        )
-        self.committed_batch = batch_id
-
-    def load_extra(self, table: str, schema: str) -> DataFrame:
-        """Caller-owned state stored alongside (e.g. the emit stage's
-        parked reply rows), read from the current committed snapshot."""
-        if self.store is None:
-            return self.spark.createDataFrame([], schema)
-        return self.store.load(self.committed_batch, table, schema)
 
     # -- the chase --------------------------------------------------------
     def process_batch(self, acts: DataFrame) -> DataFrame:
@@ -417,29 +164,21 @@ class IncrementalResolver:
             if newly_replies is not None
             else self.spark.createDataFrame([], _RESOLVED_SCHEMA)
         )
-        # Checkpoint ONLY the batch's delta (O(batch) blocks) and extend
-        # `resolved` as a lazy union over checkpointed parts — the
-        # in-memory mirror of the store's delta+compaction layout. The
+        # Checkpoint ONLY the batch's delta (O(batch) blocks); the layer
+        # extends `resolved` as a lazy union over checkpointed parts. The
         # eager checkpoint also cuts every reference to the micro-batch
-        # frame, which is not valid after the batch ends. A full
-        # re-checkpoint (O(history)) happens only every COMPACT_EVERY
-        # batches to keep the union fan-in bounded.
+        # frame, which is not valid after the batch ends.
         delta = new_resolved.unionByName(newly_replies).localCheckpoint(
             eager=True
         )
-        self.resolved = self.resolved.unionByName(delta)
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.resolved = self.resolved.transform(flat_checkpoint)
-            self._since_compact = 0
         # pending carries the ADVANCED pointer — cross-batch path
         # compression: a chain of depth d resolves in O(log d) total hops
         # no matter how it splits across batches
-        self.pending = work.select(
+        pending = work.select(
             "id", F.col("ptr").alias("parent_id")
         ).transform(flat_checkpoint)
-        self._delta = delta
-        return self._delta
+        self.state.fold({"resolved": delta, "pending": pending})
+        return delta
 
     def mappings(self) -> DataFrame:
         """(child_id, root_post_id) resolved so far."""
@@ -495,19 +234,18 @@ def resolve_activities_stream(
     from ..schemas import KIND_LIKE, KIND_POST
     from ..sources.activity import parse_activities
 
-    resolver = IncrementalResolver(spark, state_dir)
+    resolver = IncrementalResolver(
+        spark, state_dir, extra_fulls={"parked": _PARKED_SCHEMA}
+    )
     out_cols = ["kind", "id", "person_id", "ts_ms", "post_id"]
-    # reply rows seen but not yet resolvable, carried across batches
-    parked = resolver.load_extra("parked", _PARKED_SCHEMA)
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         import time as _time
 
-        nonlocal parked
         _t0 = _time.monotonic()
-        rolled = resolver.begin_batch(batch_id)
-        if rolled is not None:
-            parked = resolver.store.load(rolled, "parked", _PARKED_SCHEMA)
+        resolver.begin_batch(batch_id)
+        # reply rows seen but not yet resolvable, carried across batches
+        parked = resolver.state.tables["parked"]
         batch_df = batch_df.transform(flat_checkpoint)
         if acts_out_dir is not None:
             acts_out = batch_df
@@ -545,7 +283,8 @@ def resolve_activities_stream(
         resolved_out.write.mode("overwrite").parquet(
             f"{out_dir}/batch-{batch_id:05d}"
         )
-        resolver.commit(batch_id, extra={"parked": parked})
+        resolver.state.fold({"parked": parked})
+        resolver.commit(batch_id)
         if timings is not None:  # soak/latency instrumentation
             timings.append((batch_id, _time.monotonic() - _t0))
         if _fail_at_batch is not None and batch_id == _fail_at_batch:

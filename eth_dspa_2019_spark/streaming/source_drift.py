@@ -17,9 +17,9 @@ included).
 
 State: the count table as O(batch) append-only INCREMENT deltas through
 `streaming/durable.py` — replayed deltas roll back exactly like the
-resolver's; restart adoption re-sums increments per key (additivity
-again), so a base compaction + delta tail always reconstructs the exact
-counts.
+resolver's; the table's live view re-sums increments per key
+(additivity again), so a base compaction + delta tail always reconstructs
+the exact counts, and compaction keeps the re-summed table.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..plans.pipeline import drift_from_source_vocab
-from .durable import COMPACT_EVERY, DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint
 
 _SV_SCHEMA = "source string, tok string, scnt long"
 
@@ -52,9 +52,12 @@ def _merge(sv: DataFrame) -> DataFrame:
     )
 
 
-class StreamingSourceDrift:
+class StreamingSourceDrift(DurableComponent):
     """Folds micro-batches of documents into the standing count table;
     optionally durable under ``state_dir``."""
+
+    # increments re-summed per (source, tok): the exact standing counts
+    sv = property(lambda self: self.state.live("sv"))
 
     def __init__(
         self,
@@ -66,44 +69,8 @@ class StreamingSourceDrift:
         self.spark = spark
         self.text_col = text_col
         self.state = DurableTables(
-            spark, state_dir, fulls={}, deltas={"sv": _SV_SCHEMA}
-        )
-        self._since_compact = 0
-        if self.state.committed_batch is not None:
-            self._adopt(self.state.load_latest())
-        else:
-            self._seed()
-
-    def _seed(self) -> None:
-        self.sv = self.spark.createDataFrame([], _SV_SCHEMA)
-        self._empty_delta()
-
-    def _adopt(self, tables: dict[str, DataFrame]) -> None:
-        # base compaction + increment deltas may repeat keys: re-sum
-        self.sv = _merge(tables["sv"]).transform(flat_checkpoint)
-        self._empty_delta()
-
-    def _empty_delta(self) -> None:
-        self._delta = {"sv": self.sv.limit(0)}
-
-    # -- durability hooks -------------------------------------------------
-    def begin_batch(self, batch_id: int) -> None:
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self._since_compact = 0
-            if self.state.committed_batch is None:
-                self._seed()
-            else:
-                self._adopt(tables)
-        else:
-            self._empty_delta()
-
-    def commit(self, batch_id: int) -> None:
-        self.state.commit(
-            batch_id,
-            fulls={},
-            deltas=self._delta,
-            compacted={"sv": self.sv},
+            spark, state_dir, fulls={}, deltas={"sv": _SV_SCHEMA},
+            live={"sv": _merge},
         )
 
     # -- the fold ---------------------------------------------------------
@@ -113,13 +80,7 @@ class StreamingSourceDrift:
         inc = _batch_counts(new_docs, self.text_col).transform(
             flat_checkpoint
         )
-        self._delta["sv"] = self._delta["sv"].unionByName(inc)
-        self.sv = _merge(self.sv.unionByName(inc)).transform(
-            flat_checkpoint
-        )
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self._since_compact = 0
+        self.state.fold({"sv": inc})
 
     # -- the canary read --------------------------------------------------
     def close_epoch(self) -> DataFrame:

@@ -41,7 +41,7 @@ from ..operators.similarity import (
     ivf_sq8_search,
     stride_centroids,
 )
-from .durable import COMPACT_EVERY, DurableTables, flat_checkpoint
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _LISTS_SCHEMA = (
     "centroid_id long, vec_id long, c_qvec array<tinyint>, c_qn2 long"
@@ -54,9 +54,14 @@ _DEL_SCHEMA = "vec_id long"
 SEED_STRIDE = 7
 
 
-class StreamingVectorIndex:
+class StreamingVectorIndex(DurableComponent):
     """Folds micro-batches of (vec_id, embedding) into a durable IVF-SQ8
     index; ``search(queries)`` serves ANN top-k from the standing lists."""
+
+    lists = table("lists")
+    vecs = table("vecs")
+    centroids = table("cent")
+    deleted = table("del")
 
     def __init__(self, spark: SparkSession, state_dir: str | None = None):
         self.spark = spark
@@ -72,63 +77,9 @@ class StreamingVectorIndex:
                 "cent": _CENT_SCHEMA,
                 "del": _DEL_SCHEMA,
             },
-        )
-        self._since_compact = 0
-        if self.state.committed_batch is not None:
-            self._adopt(self.state.load_latest())
-        else:
-            self._seed()
-
-    def _seed(self) -> None:
-        self.lists = self.spark.createDataFrame([], _LISTS_SCHEMA)
-        self.vecs = self.spark.createDataFrame([], _VECS_SCHEMA)
-        self.centroids = self.spark.createDataFrame([], _CENT_SCHEMA)
-        self.deleted = self.spark.createDataFrame([], _DEL_SCHEMA)
-        self._empty_deltas()
-
-    def _adopt(self, tables: dict[str, DataFrame]) -> None:
-        self.lists = tables["lists"]
-        self.vecs = tables["vecs"]
-        self.centroids = tables["cent"]
-        self.deleted = tables["del"]
-        self._empty_deltas()
-
-    def _empty_deltas(self) -> None:
-        self._delta = {
-            "lists": self.lists.limit(0),
-            "vecs": self.vecs.limit(0),
-            "cent": self.centroids.limit(0),
-            "del": self.deleted.limit(0),
-        }
-
-    def begin_batch(self, batch_id: int) -> None:
-        tables = self.state.begin_batch(batch_id)
-        if tables is not None:
-            self._since_compact = 0
-            if self.state.committed_batch is None:
-                self._seed()
-            else:
-                self._adopt(tables)
-        else:
-            # fresh staging area; folds MERGE into it (unionByName), so
-            # an ingest and a delete in the same begin/commit cycle both
-            # reach the durable log
-            self._empty_deltas()
-
-    def commit(self, batch_id: int) -> None:
-        self.state.commit(
-            batch_id,
-            fulls={},
-            deltas=self._delta,
-            # compactions persist the PURGED index (tombstones applied) —
-            # physical deletion rides the compaction cadence, a
+            # compaction keeps the PURGED index — physical deletion is a
             # log-structured segment merge dropping deleted vectors
-            compacted={
-                "lists": self._live(self.lists),
-                "vecs": self._live(self.vecs),
-                "cent": self.centroids,
-                "del": self.deleted,
-            },
+            live={"lists": self._live, "vecs": self._live},
         )
 
     def process_batch(self, batch: DataFrame) -> None:
@@ -139,7 +90,9 @@ class StreamingVectorIndex:
             F.col("vec_id").cast("long").alias("vec_id"),
             F.col("embedding").alias("embedding"),
         )
-        if not self.centroids.head(1):
+        frames = {}
+        cent = self.centroids
+        if not cent.head(1):
             cent = (
                 stride_centroids(batch, SEED_STRIDE)
                 .select(
@@ -148,19 +101,12 @@ class StreamingVectorIndex:
                 )
                 .transform(flat_checkpoint)
             )
-            self.centroids = cent
-            self._delta["cent"] = self._delta["cent"].unionByName(cent)
-        d_lists = ivf_sq8_index(batch, self.centroids).transform(
-            flat_checkpoint
-        )
-        d_vecs = batch.select(
+            frames["cent"] = cent
+        frames["lists"] = ivf_sq8_index(batch, cent).transform(flat_checkpoint)
+        frames["vecs"] = batch.select(
             "vec_id", F.col("embedding").alias("emb")
         ).transform(flat_checkpoint)
-        self._delta["lists"] = self._delta["lists"].unionByName(d_lists)
-        self._delta["vecs"] = self._delta["vecs"].unionByName(d_vecs)
-        self.lists = self.lists.unionByName(d_lists)
-        self.vecs = self.vecs.unionByName(d_vecs)
-        self._tick_compact()
+        self.state.fold(frames)
 
     def delete_vecs(self, ids: DataFrame) -> None:
         """Right-to-be-forgotten fold: retract the given vector ids.
@@ -172,16 +118,7 @@ class StreamingVectorIndex:
             .distinct()
             .transform(flat_checkpoint)
         )
-        self._delta["del"] = self._delta["del"].unionByName(d)
-        self.deleted = self.deleted.unionByName(d)
-        self._tick_compact()
-
-    def _tick_compact(self) -> None:
-        self._since_compact += 1
-        if self._since_compact >= COMPACT_EVERY:
-            self.lists = self._live(self.lists).transform(flat_checkpoint)
-            self.vecs = self._live(self.vecs).transform(flat_checkpoint)
-            self._since_compact = 0
+        self.state.fold({"del": d})
 
     def _live(self, df: DataFrame) -> DataFrame:
         """An index relation with tombstones applied — deletion is

@@ -178,7 +178,7 @@ for i, (clo, chi) in enumerate(zip(cuts[:-1], cuts[1:])):
     rows.append(dict(batch=i, sec=round(dt, 2), kept=kept, state_bytes=nb))
     print("corpus_dedup", rows[-1], flush=True)
 corpus_final = (
-    comp._active(comp.keys, "id").select("id").distinct().count()
+    comp.state.live("keys").select("id").distinct().count()
 )
 results["corpus_dedup"] = {
     "wall_sec": round(time.time() - t_all, 1),

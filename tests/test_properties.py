@@ -259,7 +259,6 @@ def test_durable_tables_model_based(spark, tmp_path_factory, data):
 
     dt = mk()
     model: dict[int, int] = {}  # batch -> x (the committed delta content)
-    acc = spark.createDataFrame([], deltas["log"])
     next_batch = 0
     n_steps = data.draw(st.integers(4, 10))
     for step in range(n_steps):
@@ -268,31 +267,22 @@ def test_durable_tables_model_based(spark, tmp_path_factory, data):
         )
         if action == "crash":
             dt = mk()
-            t = dt.load_latest()
-            acc = t["log"]
             continue
         if action == "replay" and model:
             bid = max(model)  # the engine replays the LAST committed batch
-            rolled = dt.begin_batch(bid)
-            assert rolled is not None
-            acc = rolled["log"]
+            assert dt.begin_batch(bid)
             x = data.draw(st.integers(0, 1000), label=f"rx{step}")
         else:
             bid = next_batch
-            assert dt.begin_batch(bid) is None
+            assert not dt.begin_batch(bid)
             x = data.draw(st.integers(0, 1000), label=f"x{step}")
         d = spark.createDataFrame([(bid, x)], deltas["log"])
-        acc = acc.unionByName(d)
-        dt.commit(
-            bid,
-            {"cur": spark.createDataFrame([(bid,)], fulls["cur"])},
-            {"log": d},
-            {"log": acc},
-        )
+        dt.fold({"cur": spark.createDataFrame([(bid,)], fulls["cur"]), "log": d})
+        dt.commit(bid)
         model[bid] = x
         next_batch = bid + 1
 
-    final = {r["batch"]: r["x"] for r in mk().load_latest()["log"].collect()}
+    final = {r["batch"]: r["x"] for r in mk().tables["log"].collect()}
     assert final == model
     assert len(glob.glob(f"{sdir}/v*")) <= COMPACT_EVERY + 2
 

@@ -110,9 +110,9 @@ def test_resolver_snapshot_writes_are_o_batch(spark, tmp_path):
     BATCH's delta (rows resolved that batch), not the full history; full
     compactions appear only at the COMPACT_EVERY cadence (plus the initial
     base), and reconstruction equals the in-memory state."""
+    from eth_dspa_2019_spark.streaming.durable import COMPACT_EVERY
     from eth_dspa_2019_spark.streaming.resolution import (
         _RESOLVED_SCHEMA,
-        COMPACT_EVERY,
         IncrementalResolver,
     )
 
@@ -157,10 +157,8 @@ def test_resolver_snapshot_writes_are_o_batch(spark, tmp_path):
 def test_resolver_compaction_prunes_old_versions(spark, tmp_path):
     """Crossing a compaction boundary prunes versions below the previous
     base while keeping the rollback target reconstructable."""
-    from eth_dspa_2019_spark.streaming.resolution import (
-        COMPACT_EVERY,
-        IncrementalResolver,
-    )
+    from eth_dspa_2019_spark.streaming.durable import COMPACT_EVERY
+    from eth_dspa_2019_spark.streaming.resolution import IncrementalResolver
 
     sdir = str(tmp_path / "state")
     r = IncrementalResolver(spark, state_dir=sdir)
@@ -192,9 +190,9 @@ def test_state_store_missing_table_raises(spark, tmp_path):
     raise, not silently reset resolver state to empty."""
     import pytest
 
+    from eth_dspa_2019_spark.streaming.durable import _StateStore
     from eth_dspa_2019_spark.streaming.resolution import (
         _PARKED_SCHEMA,
-        _StateStore,
         IncrementalResolver,
     )
 
@@ -237,39 +235,37 @@ def test_durable_tables_lifecycle(spark, tmp_path):
         return DurableTables(spark, sdir, fulls, deltas)
 
     dt = mk()
-    acc = spark.createDataFrame([], deltas["log"])
     for b in range(8):
-        assert dt.begin_batch(b) is None  # fresh ids never roll back
+        assert not dt.begin_batch(b)  # fresh ids never roll back
         d = spark.createDataFrame([(b, b * 10)], deltas["log"])
-        acc = acc.unionByName(d)
         cur = spark.createDataFrame([(0, b)], fulls["cursor"])
-        dt.commit(b, {"cursor": cur}, {"log": d}, {"log": acc})
+        dt.fold({"cursor": cur, "log": d})
+        dt.commit(b)
 
     # fresh process: recovers all 8 batches through the delta chain
     dt2 = mk()
-    t = dt2.load_latest()
+    t = dt2.tables
     assert sorted(r["batch"] for r in t["log"].collect()) == list(range(8))
     assert t["cursor"].collect()[0]["v"] == 7
 
     # crash-replay: the engine re-runs batch 7 → state must roll back one
     # version and re-absorb the batch without duplicating its delta
-    rolled = dt2.begin_batch(7)
-    assert rolled is not None
+    assert dt2.begin_batch(7)
+    rolled = dt2.tables
     assert sorted(r["batch"] for r in rolled["log"].collect()) == list(range(7))
-    acc2 = rolled["log"]
     d = spark.createDataFrame([(7, 999)], deltas["log"])  # new content
-    acc2 = acc2.unionByName(d)
-    dt2.commit(7, {"cursor": spark.createDataFrame([(0, 70)], fulls["cursor"])},
-               {"log": d}, {"log": acc2})
+    dt2.fold({"cursor": spark.createDataFrame([(0, 70)], fulls["cursor"]),
+              "log": d})
+    dt2.commit(7)
     for b in range(8, 12):
-        assert dt2.begin_batch(b) is None
+        assert not dt2.begin_batch(b)
         d = spark.createDataFrame([(b, b * 10)], deltas["log"])
-        acc2 = acc2.unionByName(d)
-        dt2.commit(b, {"cursor": spark.createDataFrame([(0, b)], fulls["cursor"])},
-                   {"log": d}, {"log": acc2})
+        dt2.fold({"cursor": spark.createDataFrame([(0, b)], fulls["cursor"]),
+                  "log": d})
+        dt2.commit(b)
 
     # final recovery sees the REPLAYED batch-7 content, not the original
-    t3 = mk().load_latest()
+    t3 = mk().tables
     rows = {r["batch"]: r["x"] for r in t3["log"].collect()}
     assert rows[7] == 999
     assert sorted(rows) == list(range(12))
@@ -316,3 +312,81 @@ def test_flat_checkpoint_strips_origin_statistics(spark):
             st.alias("x").join(st.alias("y"), "k").limit(10)
         )
     assert bits(st) <= 64, bits(st)
+
+
+def test_begin_commit_without_fold_persists_no_delta(spark, sf_dir, tmp_path):
+    """A begin/commit cycle with no fold commits an EMPTY delta: the
+    staging area is emptied at every begin_batch. A stale staging area
+    would persist the previous batch's delta a second time, and a
+    restart would then recover every row of that batch twice."""
+    from eth_dspa_2019_spark.sources.activity import load_activities
+    from eth_dspa_2019_spark.streaming.anomaly import StreamingAnomalyDetector
+    from eth_dspa_2019_spark.streaming.resolution import IncrementalResolver
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    sdir = str(tmp_path / "resolver")
+    r = IncrementalResolver(spark, state_dir=sdir)
+    r.begin_batch(0)
+    r.process_batch(
+        spark.createDataFrame(
+            [(1, "comment", 9, None), (2, "comment", 9, None)],
+            "id long, kind string, post_id long, parent_id long",
+        )
+    )
+    r.commit(0)
+    r.begin_batch(1)
+    r.commit(1)
+    assert r.resolved.count() == 2
+    assert rows(IncrementalResolver(spark, state_dir=sdir).resolved) == rows(
+        r.resolved
+    )
+
+    ddir = str(tmp_path / "detector")
+    det = StreamingAnomalyDetector(spark, state_dir=ddir)
+    det.begin_batch(0)
+    det.process_batch(load_activities(spark, sf_dir))
+    det.commit(0)
+    det.begin_batch(1)
+    det.commit(1)
+    assert det.flagged.count() > 0
+    assert rows(StreamingAnomalyDetector(spark, state_dir=ddir).flagged) == rows(
+        det.flagged
+    )
+
+
+def test_durable_state_lives_in_one_module():
+    """Source guard: one store, one compaction cadence and one staging
+    area, all in streaming/durable.py — no component keeps a compaction
+    counter or a delta dict, or branches on the committed version."""
+    import os
+    import re
+
+    import eth_dspa_2019_spark
+
+    pkg = os.path.dirname(os.path.abspath(eth_dspa_2019_spark.__file__))
+    durable = os.path.join("streaming", "durable.py")
+    owned = re.compile(
+        r"\b_StateStore\b|\b_since_compact\b|\bcommitted_batch\b"
+        r"|^COMPACT_EVERY\s*=|^def flat_checkpoint\b",
+        re.M,
+    )
+    staging = re.compile(r"def _(seed|empty_deltas?)\b|self\._delta\b")
+    owners, stagers = set(), set()
+    for root, _, names in os.walk(pkg):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                src = fh.read()
+            rel = os.path.relpath(path, pkg)
+            if owned.search(src):
+                owners.add(rel)
+            if staging.search(src):
+                stagers.add(rel)
+    assert owners == {durable}
+    assert stagers == set()
+    with open(os.path.join(pkg, durable)) as fh:
+        assert "resolution" not in re.findall(r"^from \.(\w+)", fh.read(), re.M)

@@ -74,17 +74,19 @@ def test_fold_matches_reference_any_split(spark):
         assert _snap_dict(det.snap) == ref, f"split {n_batches}"
 
 
+def _stage_chunks(spark, rows, base, n_chunks=3):
+    per = len(rows) // n_chunks + 1
+    for i in range(n_chunks):
+        spark.createDataFrame(
+            rows[i * per : (i + 1) * per], _CHANGE_SCHEMA
+        ).coalesce(1).write.mode("overwrite").parquet(str(base / f"chunk{i}"))
+    return f"{base}/chunk*"
+
+
 def test_stream_crash_restart_exactly_once(spark, tmp_path):
     rows = _changes()
     ref = _reference_fold({k: 100 * k for k in range(6)}, rows)
-    per = len(rows) // 3 + 1
-    for i in range(3):
-        spark.createDataFrame(
-            rows[i * per : (i + 1) * per], _CHANGE_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"chunk{i}")
-        )
-    rglob = f"{tmp_path}/chunk*"
+    rglob = _stage_chunks(spark, rows, tmp_path)
     odir, ck, st = (
         str(tmp_path / "out"),
         str(tmp_path / "ck"),
@@ -108,3 +110,44 @@ def test_stream_crash_restart_exactly_once(spark, tmp_path):
 
     last = sorted(_g.glob(f"{odir}/batch-*"))[-1]
     assert _snap_dict(spark.read.parquet(last)) == ref
+
+
+def test_stream_crash_at_first_batch_reseeds(spark, tmp_path):
+    """A crash right after batch 0's state commit replays batch 0: the
+    state rolls back past the first commit and is rebuilt from the seed
+    snapshot, so every emitted snapshot and the final persisted state
+    equal an uninterrupted run's."""
+    import glob as _g
+
+    rglob = _stage_chunks(spark, _changes(), tmp_path / "changes")
+    schema = spark.createDataFrame([], _CHANGE_SCHEMA).schema
+
+    def run(tag, fail_at=None):
+        return snapshot_merge_stream(
+            spark, rglob, schema, _seed(spark), str(tmp_path / tag / "out"),
+            str(tmp_path / tag / "ck"), str(tmp_path / tag / "state"),
+            _fail_at_batch=fail_at,
+        )
+
+    want = run("ref")
+    try:
+        run("crash", fail_at=0)
+        raise AssertionError("injected crash did not surface")
+    except Exception:
+        pass
+    got = run("crash")
+    assert _snap_dict(got.snap) == _snap_dict(want.snap)
+
+    def dirs(tag, pattern):
+        return sorted(_g.glob(str(tmp_path / tag / pattern)))
+
+    ref_out, got_out = dirs("ref", "out/batch-*"), dirs("crash", "out/batch-*")
+    assert len(ref_out) == len(got_out) == 3
+    for a, b in zip(ref_out, got_out):
+        assert _snap_dict(spark.read.parquet(b)) == _snap_dict(
+            spark.read.parquet(a)
+        )
+    final = [dirs(t, "state/v*")[-1] for t in ("ref", "crash")]
+    assert [p.rsplit("/", 1)[1] for p in final] == ["v2", "v2"]
+    a, b = (spark.read.parquet(f"{p}/snap.parquet") for p in final)
+    assert _snap_dict(b) == _snap_dict(a)

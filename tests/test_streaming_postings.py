@@ -146,3 +146,45 @@ def test_incremental_nb_classifier_equals_batch_including_after_delete(
         tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
     )
     assert _rows(got2) == _rows(want2)
+
+
+def test_in_memory_compaction_purges_tombstones(spark, sf_dir, tmp_path):
+    """COMPACT_EVERY + 1 folds, one of them a delete in the middle: the
+    in-memory compaction (on an ingest fold) keeps the live postings, so
+    the deleted documents are physically gone; search equals a fresh
+    index over the surviving documents, before and after a restart."""
+    from eth_dspa_2019_spark.streaming.durable import COMPACT_EVERY
+    from eth_dspa_2019_spark.streaming.postings import StreamingPostingsIndex
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
+    cuts = [lo + (hi - lo) * i // COMPACT_EVERY for i in range(COMPACT_EVERY)]
+    ranges = list(zip(cuts, cuts[1:] + [hi + 1]))
+    mid = COMPACT_EVERY // 2
+    deletes = docs.filter(
+        (F.col("doc_id") < ranges[mid][0]) & (F.col("doc_id") % 5 == 0)
+    ).select("doc_id")
+    st = str(tmp_path / "state")
+    idx = StreamingPostingsIndex(spark, st)
+    folds = [("ingest", r) for r in ranges[:mid]] + [("delete", None)]
+    folds += [("ingest", r) for r in ranges[mid:]]
+    assert len(folds) == COMPACT_EVERY + 1
+    for b, (kind, r) in enumerate(folds):
+        idx.begin_batch(b)
+        if kind == "delete":
+            idx.delete_docs(deletes)
+        else:
+            idx.process_batch(
+                docs.filter((F.col("doc_id") >= r[0]) & (F.col("doc_id") < r[1]))
+            )
+        idx.commit(b)
+
+    assert idx.tf.join(deletes, "doc_id").count() == 0
+    assert idx.dl.join(deletes, "doc_id").count() == 0
+    ref = StreamingPostingsIndex(spark)
+    ref.begin_batch(0)
+    ref.process_batch(docs.join(deletes, "doc_id", "left_anti"))
+    ref.commit(0)
+    want = _rows(ref.search())
+    assert _rows(idx.search()) == want
+    assert _rows(StreamingPostingsIndex(spark, st).search()) == want
