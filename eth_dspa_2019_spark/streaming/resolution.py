@@ -12,8 +12,9 @@ the timers with two engine-managed state tables advanced per micro-batch:
 
 Each batch runs pointer-DOUBLING hops over (new rows ∪ pending): a hop
 either completes a row or jumps it two chain positions, so the loop exits
-after ``~log2(resolvable depth)+1`` hops with ONE cheap emptiness probe
-per hop on an already-materialized frame — instead of the r3 convergence
+after ``~log2(resolvable depth)+1`` hops. The exit test reads the hop's
+done / not-done counts, observed on the hop's own checkpoint
+(`durable.materialize`) — no probe job — instead of the r3 convergence
 loop's one SINGLE-hop join + two blocking probes per chain level (up to
 128 driver-blocking jobs per batch, VERDICT r3 #5). Arrival order never
 matters: a reply that arrives before its parent waits in ``pending`` with
@@ -34,7 +35,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import KIND_COMMENT, KIND_REPLY
-from .durable import DurableComponent, DurableTables, flat_checkpoint, table
+from .durable import (
+    DurableComponent,
+    DurableTables,
+    flat_checkpoint,
+    materialize,
+    table,
+)
 
 _RESOLVED_SCHEMA = "id long, root_post_id long"
 _PENDING_SCHEMA = "id long, parent_id long"
@@ -45,10 +52,11 @@ _MAX_HOPS = 16
 
 def _pruned_state_side(resolved_all: DataFrame, work: DataFrame) -> DataFrame:
     """Restrict the historical state to the rows the chase join can match:
-    semi-join on the working set's distinct pointers (broadcast — the
-    working set is micro-batch-bounded, the state is not). Factored out so
-    the plan shape is unit-assertable."""
-    ptrs = work.select(F.col("ptr").alias("id")).distinct()
+    semi-join on the working set's pointers (broadcast — the working set
+    is micro-batch-bounded, the state is not; duplicate pointers are
+    harmless on the build side of a semi-join). Factored out so the plan
+    shape is unit-assertable."""
+    ptrs = work.select(F.col("ptr").alias("id"))
     return resolved_all.join(F.broadcast(ptrs), "id", "semi")
 
 
@@ -97,13 +105,13 @@ class IncrementalResolver(DurableComponent):
         # hop, so "a hop completed nothing" IS the fixpoint — the hop
         # count is ~log2(resolvable depth)+1 (vs the r3 convergence loop:
         # one SINGLE-hop join + 2 blocking probes per chain LEVEL, up to
-        # 128 driver jobs per batch). Each hop materializes exactly two
-        # frames (the chased working set and the tiny newly-done set —
-        # keeping the chase lazy instead doubles the plan tree per hop
-        # and re-executes the join cascade per probe, measured
-        # exponential); the fixpoint check rides the already-materialized
-        # hit frame for free. Chains deeper than 2^_MAX_HOPS carry their
-        # compressed pointers to the next batch.
+        # 128 driver jobs per batch). Each hop materializes ONE frame, the
+        # chased working set (keeping the chase lazy instead doubles the
+        # plan tree per hop and re-executes the join cascade per probe,
+        # measured exponential); the fixpoint check reads the done/not-done
+        # counts observed on that same checkpoint, so it launches no job.
+        # Chains deeper than 2^_MAX_HOPS carry their compressed pointers to
+        # the next batch.
         done_parts: list[DataFrame] = []
         for _ in range(_MAX_HOPS):
             # A hop only ever matches state rows whose id equals some
@@ -112,7 +120,8 @@ class IncrementalResolver(DurableComponent):
             # `resolved` table is scanned (with the ptr-set pushed to the
             # scan), never shuffled. The working set is bounded by the
             # micro-batch plus still-pending replies, so broadcasting its
-            # distinct pointers is cheap even when the state is huge.
+            # pointers — and the O(|work|)-row lookup built from them — is
+            # cheap even when the state is huge.
             lookup = _pruned_state_side(resolved_all, work).select(
                 F.col("id").alias("x"),
                 F.col("root_post_id").alias("nxt"),
@@ -135,42 +144,40 @@ class IncrementalResolver(DurableComponent):
             )
             # parent resolved → absorb its root; parent in the working set
             # → jump to ITS pointer (path doubling); parent unseen → hold
-            chased = (
+            chased, seen = materialize(
                 work.alias("c")
-                .join(lookup.alias("m"), F.col("c.ptr") == F.col("m.x"), "left")
+                .join(
+                    F.broadcast(lookup).alias("m"),
+                    F.col("c.ptr") == F.col("m.x"),
+                    "left",
+                )
                 .select(
                     F.col("c.id").alias("id"),
                     F.when(F.col("m.x").isNull(), F.col("c.ptr"))
                     .otherwise(F.col("m.nxt"))
                     .alias("ptr"),
                     F.coalesce(F.col("m.mdone"), F.lit(False)).alias("done"),
-                )
-                .transform(flat_checkpoint)
+                ),
+                done=F.count_if("done"),
             )
-            # hit/work are lazy filters over the CHECKPOINTED chased frame —
-            # probing them is a block-manager scan, not a recompute
+            # hit/work are lazy filters over the CHECKPOINTED chased frame
             hit = chased.filter(F.col("done")).select("id", "ptr")
             work = chased.filter(~F.col("done")).select("id", "ptr")
-            if hit.limit(1).count() == 0:
+            if seen.done == 0:
                 break  # nothing else resolvable this batch → stays pending
             done_parts.append(hit)
-            if work.limit(1).count() == 0:
+            if seen.done == seen.rows:
                 break  # everything resolved — skip the would-be-empty hop
-        newly_replies = done_parts[0] if done_parts else None
-        for part in done_parts[1:]:
-            newly_replies = newly_replies.unionByName(part)
-        newly_replies = (
-            newly_replies.select("id", F.col("ptr").alias("root_post_id"))
-            if newly_replies is not None
-            else self.spark.createDataFrame([], _RESOLVED_SCHEMA)
-        )
+        delta = new_resolved
+        for part in done_parts:
+            delta = delta.unionByName(
+                part.select("id", F.col("ptr").alias("root_post_id"))
+            )
         # Checkpoint ONLY the batch's delta (O(batch) blocks); the layer
         # extends `resolved` as a lazy union over checkpointed parts. The
         # eager checkpoint also cuts every reference to the micro-batch
         # frame, which is not valid after the batch ends.
-        delta = new_resolved.unionByName(newly_replies).localCheckpoint(
-            eager=True
-        )
+        delta = flat_checkpoint(delta)
         # pending carries the ADVANCED pointer — cross-batch path
         # compression: a chain of depth d resolves in O(log d) total hops
         # no matter how it splits across batches
@@ -254,29 +261,27 @@ def resolve_activities_stream(
             acts_out.write.mode("overwrite").parquet(
                 f"{acts_out_dir}/batch-{batch_id:05d}"
             )
-        newly = resolver.process_batch(batch_df).transform(flat_checkpoint)
+        newly = resolver.process_batch(batch_df)
         direct = batch_df.filter(
             F.col("kind").isin(KIND_POST, KIND_LIKE, KIND_COMMENT)
         ).select(*out_cols)
         reply_rows = batch_df.filter(F.col("kind") == KIND_REPLY).select(
             "kind", "id", "person_id", "ts_ms", "parent_id"
         ).unionByName(parked)
-        hit = (
+        # ONE pass over reply rows ⋈ newly (broadcast: the batch's own
+        # mappings): the rows that found a root are emitted, the rest park
+        joined = flat_checkpoint(
             reply_rows.join(
-                newly.withColumnRenamed("id", "rid"),
-                F.col("id") == F.col("rid"),
-            )
-            .select(
-                "kind",
-                "id",
-                "person_id",
-                "ts_ms",
-                F.col("root_post_id").alias("post_id"),
+                F.broadcast(newly.withColumn("found", F.lit(True))), "id", "left"
             )
         )
-        parked = reply_rows.join(
-            hit.select("id"), "id", "left_anti"
-        ).transform(flat_checkpoint)
+        hit = joined.filter(F.col("found").isNotNull()).select(
+            "kind", "id", "person_id", "ts_ms",
+            F.col("root_post_id").alias("post_id"),
+        )
+        parked = joined.filter(F.col("found").isNull()).select(
+            *reply_rows.columns
+        )
         resolved_out = direct.unionByName(hit)
         if sink_parts is not None:
             resolved_out = resolved_out.coalesce(sink_parts)

@@ -390,3 +390,138 @@ def test_durable_state_lives_in_one_module():
     assert stagers == set()
     with open(os.path.join(pkg, durable)) as fh:
         assert "resolution" not in re.findall(r"^from \.(\w+)", fh.read(), re.M)
+
+
+def _partitions(df) -> int:
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
+def _runs_python(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_materialize_observes_rows_and_metrics(spark):
+    """materialize() returns the input's rows (right-sized, stats
+    stripped) plus the row count and the caller's aggregates, read from
+    the checkpoint's own job: they equal a separate agg. Frames with no
+    rows — pruned to an empty relation by the optimizer, or filtered to
+    nothing at run time — report rows == 0 without waiting on a metric."""
+    import threading
+
+    from eth_dspa_2019_spark.streaming.durable import local_frame, materialize
+
+    df = (
+        spark.range(0, 500, numPartitions=8)
+        .withColumn("k", F.col("id") % 7)
+        .withColumn("odd", F.col("id") % 2 == 1)
+    )
+    frame, seen = materialize(
+        df, odd=F.count_if("odd"), s=F.sum("k"), top=F.max("id")
+    )
+    want = df.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if("odd").alias("odd"),
+        F.sum("k").alias("s"),
+        F.max("id").alias("top"),
+    ).first()
+    assert seen.asDict() == want.asDict()
+    assert sorted(map(tuple, frame.collect())) == sorted(map(tuple, df.collect()))
+    assert _partitions(frame) == 1  # ~12 KB of rows: one split
+
+    results = {}
+
+    def run(name, empty):
+        results[name] = materialize(empty, s=F.sum("id"))
+
+    threads = [
+        threading.Thread(target=run, args=(name, empty), daemon=True)
+        for name, empty in [
+            ("pruned", spark.range(10).where(F.lit(False))),
+            ("local", local_frame(spark, "id long")),
+            ("filtered", spark.range(10).filter(F.col("id") > 100)),
+        ]
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+        assert not t.is_alive(), "materialize blocked on an empty frame"
+    for name, (frame, seen) in results.items():
+        assert (seen.rows, seen.s) == (0, None), name
+        assert frame.count() == 0, name
+
+
+def test_per_batch_state_runs_no_python_workers(spark, sf_dir, tmp_path):
+    """The frames a fold builds on the driver — empty tables, a load at no
+    version, the anomaly detector's running-sum registers — are JVM
+    relations: scanning them never starts a Python worker."""
+    from eth_dspa_2019_spark.sources.activity import load_activities
+    from eth_dspa_2019_spark.streaming.anomaly import StreamingAnomalyDetector
+    from eth_dspa_2019_spark.streaming.durable import DurableTables, _StateStore
+
+    dt = DurableTables(spark, None, {"f": "a long, b string"}, {"d": "c long"})
+    for name, t in dt.tables.items():
+        assert not _runs_python(t), name
+    store = _StateStore(spark, str(tmp_path / "store"))
+    assert not _runs_python(store.load(None, "f", "a long"))
+    assert not _runs_python(store.load_chain(None, "d", "c long"))
+
+    det = StreamingAnomalyDetector(spark)
+    det.process_batch(load_activities(spark, sf_dir))
+    sums = det.state.tables["sums"]
+    assert not _runs_python(sums)
+    assert {r["feature"]: [r["s"], r["c"]] for r in sums.collect()} == det.sums
+
+
+def test_delta_table_partitions_stay_bounded(spark, sf_dir):
+    """Each fold appends one part to a delta table's lazy union and
+    compaction merges the union: `resolved` never carries more than
+    COMPACT_EVERY + 1 partitions. A part used to keep its plan's
+    partition count (the sum of its union inputs), and compaction kept
+    the union's, so the table grew by several partitions per fold and
+    every hop's scan of it by as many tasks."""
+    from eth_dspa_2019_spark.sources.activity import load_activities
+    from eth_dspa_2019_spark.streaming.durable import COMPACT_EVERY
+    from eth_dspa_2019_spark.streaming.resolution import IncrementalResolver
+
+    acts = load_activities(spark, sf_dir)
+    lo, hi = acts.agg(F.min("ts_ms"), F.max("ts_ms")).first()
+    n = COMPACT_EVERY + 1
+    cuts = [lo + (hi - lo) * i // n for i in range(n)] + [hi + 1]
+    r = IncrementalResolver(spark)
+    seen = []
+    for a, b in zip(cuts, cuts[1:]):
+        r.process_batch(acts.filter((F.col("ts_ms") >= a) & (F.col("ts_ms") < b)))
+        seen.append(_partitions(r.resolved))
+    assert max(seen) <= COMPACT_EVERY + 1, seen
+    assert r.resolved.count() == r.resolved.select("id").distinct().count()
+
+
+def test_restarted_state_outlives_the_versions_it_loaded(spark, tmp_path):
+    """A restarted component reads its tables from snapshot versions that
+    the first disk compaction after the restart prunes. The loaded tables
+    must hold their data: read lazily from those files, the resolver's
+    next fold after the prune failed with FILE_NOT_EXIST (a 12-batch
+    composed soak with a crash at batch 5 died at batch 10)."""
+    from eth_dspa_2019_spark.streaming.durable import COMPACT_EVERY
+    from eth_dspa_2019_spark.streaming.resolution import IncrementalResolver
+
+    sdir = str(tmp_path / "state")
+
+    def run(r, batches):
+        for b in batches:
+            r.begin_batch(b)
+            r.process_batch(
+                spark.createDataFrame(
+                    [(b, "comment", 1, None), (100 + b, "reply", None, b)],
+                    "id long, kind string, post_id long, parent_id long",
+                )
+            )
+            r.commit(b)
+
+    run(IncrementalResolver(spark, state_dir=sdir), range(3))
+    r = IncrementalResolver(spark, state_dir=sdir)  # restart from v2
+    run(r, range(3, COMPACT_EVERY + 3))
+    assert not (tmp_path / "state" / "v2").exists()  # pruned under r
+    assert r.resolved.count() == 2 * (COMPACT_EVERY + 3)
+    assert r.pending.count() == 0
