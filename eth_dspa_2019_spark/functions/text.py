@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Small fixed lexicons; must stay in sync with the oracle SQL (plans use
-# the *_sql helpers below so there is a single source of truth).
+# Small fixed lexicons; must stay in sync with the oracle SQL (the plans
+# render them into it, so this is the single source of truth).
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
 
 # Marker lexicons for the n-gram/keyword language-ID heuristic. On real
@@ -31,10 +31,6 @@ def tokens(col: Column | str) -> Column:
     normalized; use ``F.split(col, r'\\s+')`` for raw text."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(c, " ")
-
-
-def sql_list(words: tuple[str, ...]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
 
 
 def token_count(toks: Column) -> Column:

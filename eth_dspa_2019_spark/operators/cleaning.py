@@ -189,19 +189,6 @@ def repair_comment_tree(acts: DataFrame) -> DataFrame:
     return _forest_walk(acts, keep_semantics=False)
 
 
-def repaired_likes(acts: DataFrame) -> DataFrame:
-    posts = _posts_ts(acts)
-    return (
-        acts.filter(F.col("kind") == KIND_LIKE)
-        .join(posts, F.col("post_id") == F.col("pid"))
-        .select(
-            "person_id",
-            "post_id",
-            _fix(F.col("raw_ts"), F.col("parent_ts")).alias("ts_fixed"),
-        )
-    )
-
-
 def invariant_counts(acts: DataFrame, tree: DataFrame | None = None) -> DataFrame:
     """C3 checker over the repaired stream: counts + violation counts
     (child at-or-before parent) per rule — all violation counts must be 0.

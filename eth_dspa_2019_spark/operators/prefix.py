@@ -19,6 +19,11 @@ fixed-point sums are associative), but the widest window any reducer
 sees is one range partition. The driver-side ``.collect()`` in step 2 is
 partition-count-sized metadata, not data — the pattern stays distributed.
 
+A caller that materializes the result anyway (a stream micro-batch) can
+swap steps 2 and 3 (:func:`range_running_sums`): run the per-range
+window first, OBSERVE the per-range totals on the same job, and add the
+offsets as a projection on the materialized frame.
+
 Used by the Task 3 global running means (`operators/anomaly.py`, the
 reference's broadcast-signatures state, `SN/task/anomalydetection/
 AnomalousUserDetector.java:160-200`) and the global-rank queries
@@ -36,27 +41,24 @@ from pyspark.sql.window import Window
 _PID = "__pfx_pid"
 
 
-def _range_partitioned(
-    df: DataFrame,
-    order_cols: list[str],
-    num_partitions: int | None,
-    cache_registry: list | None = None,
+def _ranges(
+    df: DataFrame, order_cols: list[str], num_partitions: int | None
 ) -> DataFrame:
-    """Range-partition by the order key and stamp the partition id.
-
-    Persisted: the offsets job and the main pass must see the same
-    physical partitioning (range boundaries come from sampling). Pass a
-    ``cache_registry`` list to receive the persisted frame so long-lived
-    callers (per-micro-batch folds) can unpersist after materializing —
-    otherwise one persisted RDD leaks per call until clear_plan_caches."""
+    """Range-partition by the order key and stamp the partition id."""
     n = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     part = df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-    out = part.withColumn(_PID, F.spark_partition_id()).persist()
-    if cache_registry is not None:
-        cache_registry.append(out)
-    return out
+    return part.withColumn(_PID, F.spark_partition_id())
+
+
+def _range_partitioned(
+    df: DataFrame, order_cols: list[str], num_partitions: int | None
+) -> DataFrame:
+    """:func:`_ranges`, persisted: the offsets job and the main pass must
+    see the same physical partitioning (range boundaries come from
+    sampling). The persisted frame lives until ``clear_plan_caches``."""
+    return _ranges(df, order_cols, num_partitions).persist()
 
 
 def _pid_map(pairs: dict[int, int | float]) -> Column:
@@ -147,13 +149,52 @@ def global_running_max(
     return out.drop(_PID, *tmp.values())
 
 
+# The range-prefix SQL, shared by the collect path (global_running_sums)
+# and the one-pass path (range_running_sums). It is SQL text: the Column
+# form paid ~130 py4j round-trips per name (two 2·|partitions|-literal
+# create_maps, window spec, when chain), multiplied by withColumn's plan
+# copy. Same expressions, same physical plan, bit-identical offsets.
+
+
+def _over(order_cols: list[str]) -> str:
+    """The running frame within one range."""
+    order = ", ".join(f"`{c}`" for c in order_cols)
+    return (
+        f"OVER (PARTITION BY `{_PID}` ORDER BY {order} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+
+
+def _offset(prior: dict[int, int]) -> str:
+    """A row's offset: a literal range-id → value map (range-count
+    entries, a projection — no join stage)."""
+    entries = ", ".join(f"{k}, CAST({v} AS BIGINT)" for k, v in prior.items())
+    return f"coalesce(map({entries})[`{_PID}`], 0)"
+
+
+def _exclusive(
+    partials: dict[int, tuple[int | None, int]], base: tuple[int, int] = (0, 0)
+) -> tuple[dict[int, int], dict[int, int], tuple[int, int]]:
+    """Per-range (sum, count) totals → each range's exclusive prefix (the
+    totals of every earlier range) starting from ``base``, and the grand
+    total after the last range."""
+    prior_s: dict[int, int] = {}
+    prior_c: dict[int, int] = {}
+    acc_s, acc_c = base
+    for pid in sorted(partials):
+        prior_s[pid], prior_c[pid] = acc_s, acc_c
+        s, c = partials[pid]
+        acc_s += s or 0
+        acc_c += c
+    return prior_s, prior_c, (acc_s, acc_c)
+
+
 def global_running_sums(
     df: DataFrame,
     order_cols: list[str],
     exprs: dict[str, Column],
     *,
     num_partitions: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """For each ``name -> expr``, add column ``name`` holding
     ``sum(expr) OVER (ORDER BY order_cols ROWS UNBOUNDED PRECEDING)`` —
@@ -170,7 +211,7 @@ def global_running_sums(
     """
     tmp = {name: f"__pfx_{name}" for name in exprs}
     base = df.select("*", *[c.alias(tmp[n]) for n, c in exprs.items()])
-    part = _range_partitioned(base, order_cols, num_partitions, cache_registry)
+    part = _range_partitioned(base, order_cols, num_partitions)
 
     aggs = []
     for name in exprs:
@@ -178,40 +219,77 @@ def global_running_sums(
         aggs.append(F.count(tmp[name]).alias(f"c_{name}"))
     partials = {r[_PID]: r.asDict() for r in part.groupBy(_PID).agg(*aggs).collect()}
 
-    # r11: the per-name offset projection is ONE selectExpr of SQL
-    # strings. The Column form paid ~130 py4j round-trips per name
-    # (two 2·|partitions|-literal create_maps, window spec, when chain),
-    # multiplied by withColumn's plan copy — at 10 names over 32
-    # partitions that was the bulk of task3's 11.7k-round-trip build.
-    # Same expressions, same physical plan, bit-identical offsets.
-    def _sql_map(pairs: dict[int, int]) -> str:
-        if not pairs:
-            return "map()"
-        entries = ", ".join(
-            f"{k}, CAST({v} AS BIGINT)" for k, v in pairs.items()
-        )
-        return f"map({entries})"
-
-    order_sql = ", ".join(f"`{c}`" for c in order_cols)
-    win_frame = (
-        f"OVER (PARTITION BY `{_PID}` ORDER BY {order_sql} "
-        f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    )
+    over = _over(order_cols)
     name_exprs = []
     for name in exprs:
-        prior_sum: dict[int, int] = {}
-        prior_cnt: dict[int, int] = {}
-        acc_s, acc_c = 0, 0
-        for pid in sorted(partials):
-            prior_sum[pid], prior_cnt[pid] = acc_s, acc_c
-            acc_s += partials[pid][f"s_{name}"] or 0
-            acc_c += partials[pid][f"c_{name}"]
-        win = f"sum(`{tmp[name]}`) {win_frame}"
-        off_s = f"coalesce({_sql_map(prior_sum)}[`{_PID}`], 0)"
-        off_c = f"coalesce({_sql_map(prior_cnt)}[`{_PID}`], 0)"
+        prior_s, prior_c, _ = _exclusive(
+            {pid: (p[f"s_{name}"], p[f"c_{name}"]) for pid, p in partials.items()}
+        )
+        win = f"sum(`{tmp[name]}`) {over}"
         name_exprs.append(
-            f"CASE WHEN ({win}) IS NOT NULL OR {off_c} > 0 "
-            f"THEN coalesce({win}, 0) + {off_s} END AS `{name}`"
+            f"CASE WHEN ({win}) IS NOT NULL OR {_offset(prior_c)} > 0 "
+            f"THEN coalesce({win}, 0) + {_offset(prior_s)} END AS `{name}`"
         )
     out = part.selectExpr("*", *name_exprs)
     return out.drop(_PID, *tmp.values())
+
+
+def range_running_sums(
+    df: DataFrame,
+    order_cols: list[str],
+    values: dict[str, str],
+    *,
+    num_partitions: int,
+) -> DataFrame:
+    """The two-stage range plan as ONE lazy pass, for a caller that
+    materializes it: ``df`` cut into ``num_partitions`` ranges of
+    ``order_cols``, and for each ``name -> SQL value`` the running sum
+    and count of the value WITHIN its range, as ``{name}__s`` and
+    ``{name}__c``. Observe :func:`range_partials` on the pass's
+    materialization to get the per-range totals in the same job, then
+    :func:`range_totals` turns them into offsets — a projection on the
+    materialized frame, no second job."""
+    over = _over(order_cols)
+    wins = []
+    for name, v in values.items():
+        wins.append(f"sum({v}) {over} AS `{name}__s`")
+        wins.append(f"count({v}) {over} AS `{name}__c`")
+    return _ranges(df, order_cols, num_partitions).selectExpr("*", *wins)
+
+
+def range_partials(values: dict[str, str], num_partitions: int) -> Column:
+    """Every range's (sum, count) of every value, as one array aggregate
+    over a :func:`range_running_sums` frame (``DataFrame.observe``-able;
+    range-major, then name, then sum before count)."""
+    cells = []
+    for k in range(num_partitions):
+        for v in values.values():
+            hit = f"CASE WHEN `{_PID}` = {k} THEN {v} END"
+            cells += [f"sum({hit})", f"count({hit})"]
+    return F.expr(f"array({', '.join(cells)})")
+
+
+def range_totals(
+    partials: list[int | None],
+    values: dict[str, str],
+    base: dict[str, tuple[int, int]],
+) -> tuple[dict[str, tuple[str, str]], dict[str, tuple[int, int]]]:
+    """For a materialized :func:`range_running_sums` frame whose
+    ``partials`` were observed through :func:`range_partials` (same
+    ``values``): SQL for each name's global running (sum, count) — its
+    in-range running values plus the totals of every earlier range plus
+    ``base``, the totals of everything before this frame — and each
+    name's totals after the frame (the ``base`` of the next one)."""
+    width = 2 * len(values)
+    sql, after = {}, {}
+    for i, name in enumerate(values):
+        per_range = {
+            k: (partials[at + 2 * i], partials[at + 2 * i + 1])
+            for k, at in enumerate(range(0, len(partials), width))
+        }
+        prior_s, prior_c, after[name] = _exclusive(per_range, base[name])
+        sql[name] = (
+            f"coalesce(`{name}__s`, 0) + {_offset(prior_s)}",
+            f"`{name}__c` + {_offset(prior_c)}",
+        )
+    return sql, after

@@ -87,13 +87,6 @@ def dot_fx(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_sim(dot: Column, n2a: Column, n2b: Column) -> Column:
-    """Fixed-point scales cancel: dot·1e15 / (√(a·1e15)·√(b·1e15))."""
-    return dot.cast("double") / (
-        F.sqrt(n2a.cast("double")) * F.sqrt(n2b.cast("double"))
-    )
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -34,18 +34,3 @@ def salted_count(
     )
     return partial.groupBy(*keys).agg(F.sum("_pn").alias("n"))
 
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    partial_aggs: Sequence[Column],
-    merge_aggs: Sequence[Column],
-    n_salt: int = 16,
-) -> DataFrame:
-    """General two-stage salted aggregation: ``partial_aggs`` run per
-    (keys, salt) shard, ``merge_aggs`` combine the shard columns per key.
-    The caller supplies compatible partial/merge pairs (sum/sum,
-    count/sum, collect_set/flatten-distinct, ...)."""
-    salted = df.withColumn("_salt", (F.rand(seed=0) * n_salt).cast("int"))
-    partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*merge_aggs)

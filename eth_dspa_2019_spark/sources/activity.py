@@ -68,14 +68,6 @@ def parse_creation_date(c: Column) -> Column:
     )
 
 
-def _parse_tags(raw: Column) -> Column:
-    """``"[5183, 1912, 778]"`` → array<long> (empty string/brackets → [])."""
-    inner = F.regexp_replace(raw, r"^\[|\]$", "")
-    return F.when(F.length(F.trim(inner)) == 0, F.array().cast("array<long>")).otherwise(
-        F.transform(F.split(inner, ",\\s*"), lambda x: x.cast("long"))
-    )
-
-
 def parse_activities(lines: DataFrame, value_col: str = "value") -> DataFrame:
     """Tag-dispatch parse of pipe-format activity lines into the unified
     activity frame — ONE projection with per-column CASE dispatch on the

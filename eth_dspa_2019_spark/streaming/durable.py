@@ -10,14 +10,16 @@ cadence, the versioned snapshot commit and rollback-on-replay.
 
 A component declares:
 
-- **fulls** — bounded working sets (per-user ring buffers, running-sum
-  registers, pending chase pointers): rewritten whole each batch; size
-  tracks the KEY space, not stream history.
+- **fulls** — small working sets (running-sum registers, pending chase
+  pointers): rewritten whole each batch; size tracks the KEY space, not
+  stream history.
 - **deltas** — append-only tables (flagged anomalies, resolved mappings,
-  postings, tombstone logs): each batch persists only its own additions.
-  In memory each one is a lazy union over checkpointed per-fold parts.
+  postings, tombstone logs, keyed rows such as the per-user ring
+  buffers): each batch persists only its own additions. In memory each
+  one is a lazy union over per-fold parts, each a checkpoint or a narrow
+  filter of one.
 - optional **live** views of delta tables (tombstones applied, increments
-  re-summed): what the component reads, and what compaction keeps — in
+  re-summed, the newest row per key): what the component reads, and what compaction keeps — in
   memory every ``COMPACT_EVERY`` folds, on disk every ``COMPACT_EVERY``
   batches. Physical deletion thus rides the compaction cadence, the
   log-structured delete shape.

@@ -45,13 +45,10 @@ def test_streaming_fold_has_no_single_partition_window(spark, sf_dir):
     funneling the whole micro-batch through one reducer."""
     acts = load_activities(spark, sf_dir)
     det = StreamingAnomalyDetector(spark)
-    caches = []
-    scored = det._scored(acts, cache_registry=caches)
+    scored = det._scored(acts)
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "Exchange SinglePartition" not in plan
     assert "rangepartitioning" in plan
-    for c in caches:
-        c.unpersist()
 
 
 def _ts_chunks(acts, n):
@@ -142,3 +139,80 @@ def test_detector_restart_resumes_from_snapshot(spark, sf_dir, tmp_path):
     )
     det2.commit(2)
     assert _rows(det2.anomalies()) == _rows(batch)
+
+
+def test_detector_rejects_batches_out_of_event_time_order(spark, sf_dir, tmp_path):
+    """The fold is an ordered scan, and the `users` live view keeps the
+    newest ring-buffer row per user: a batch that starts before the end
+    of the previous one must fail loudly, naming both batch ids — also
+    for a restarted detector, which reads the guard's clock from the
+    committed sums registers. A rejected batch leaves the state as it
+    was."""
+    import pytest
+
+    acts = load_activities(spark, sf_dir)
+    (lo0, hi0), (lo1, hi1) = _ts_chunks(acts, 2)
+    early = acts.filter((F.col("ts_ms") >= lo0) & (F.col("ts_ms") < hi0))
+    late = acts.filter((F.col("ts_ms") >= lo1) & (F.col("ts_ms") < hi1))
+    sdir = str(tmp_path / "state")
+
+    det = StreamingAnomalyDetector(spark, state_dir=sdir)
+    det.begin_batch(0)
+    det.process_batch(late)
+    det.commit(0)
+    sums = {k: list(v) for k, v in det.sums.items()}
+    n_flagged = det.flagged.count()
+    det.begin_batch(1)
+    with pytest.raises(ValueError, match=r"batch 1 .*batch 0 "):
+        det.process_batch(early)
+    assert det.sums == sums
+    assert det.flagged.count() == n_flagged
+
+    restarted = StreamingAnomalyDetector(spark, state_dir=sdir)
+    restarted.begin_batch(1)
+    with pytest.raises(ValueError, match=r"batch 1 .*batch 0 "):
+        restarted.process_batch(early)
+
+
+def test_detector_state_writes_are_o_batch(spark, sf_dir, tmp_path):
+    """`users` is a keyed delta table: each batch stages exactly one
+    ring-buffer row per user active in that batch, never the standing
+    user table."""
+    acts = load_activities(spark, sf_dir)
+    sdir = str(tmp_path / "state")
+    det = StreamingAnomalyDetector(spark, state_dir=sdir)
+    for bid, (lo, hi) in enumerate(_ts_chunks(acts, 3)):
+        chunk = acts.filter((F.col("ts_ms") >= lo) & (F.col("ts_ms") < hi))
+        det.begin_batch(bid)
+        det.process_batch(chunk)
+        det.commit(bid)
+        staged = spark.read.parquet(f"{sdir}/v{bid}/users__delta.parquet")
+        want = sorted(r[0] for r in chunk.select("person_id").distinct().collect())
+        assert sorted(r[0] for r in staged.select("person_id").collect()) == want
+
+
+def test_detector_steady_batch_job_budget(spark, sf_dir, tmp_path):
+    """A steady micro-batch of the detector (begin, fold, commit with
+    durable state) launches at most 11 Spark jobs: one observed pass over
+    the batch plus the state writes. Per-job scheduling is the fixed
+    cost of a small micro-batch."""
+    acts = load_activities(spark, sf_dir)
+    chunks = [
+        acts.filter((F.col("ts_ms") >= lo) & (F.col("ts_ms") < hi)).localCheckpoint()
+        for lo, hi in _ts_chunks(acts, 3)
+    ]
+    det = StreamingAnomalyDetector(spark, state_dir=str(tmp_path / "state"))
+    sc = spark.sparkContext
+    group = "test-detector-steady-batch"
+    for bid, chunk in enumerate(chunks):
+        if bid == len(chunks) - 1:
+            sc.setJobGroup(group, group)
+        try:
+            det.begin_batch(bid)
+            det.process_batch(chunk)
+            det.commit(bid)
+        finally:  # a null value removes the property
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 11, sorted(jobs)
