@@ -19,15 +19,17 @@ fixed-point sums are associative), but the widest window any reducer
 sees is one range partition. The driver-side ``.collect()`` in step 2 is
 partition-count-sized metadata, not data — the pattern stays distributed.
 
-A caller that materializes the result anyway (a stream micro-batch) can
-swap steps 2 and 3 (:func:`range_running_sums`): run the per-range
-window first, OBSERVE the per-range totals on the same job, and add the
-offsets as a projection on the materialized frame.
+A caller that materializes the result anyway can swap steps 2 and 3
+(:func:`range_running_sums`): run the per-range window first, OBSERVE the
+per-range totals on the same job, and add the offsets as a projection on
+the materialized frame. The Task 3 fold takes this one-pass path for its
+global running means, in the batch query and in every stream micro-batch
+(`operators/anomaly.py`, the reference's broadcast-signatures state,
+`SN/task/anomalydetection/AnomalousUserDetector.java:160-200`).
 
-Used by the Task 3 global running means (`operators/anomaly.py`, the
-reference's broadcast-signatures state, `SN/task/anomalydetection/
-AnomalousUserDetector.java:160-200`) and the global-rank queries
-(`plans/misc.py`).
+The collect path serves the corpus and interval running sums
+(`plans/corpus.py`, `operators/intervals.py`) and the global-rank
+queries (`plans/misc.py`).
 
 Requires non-null order columns (all call sites order by non-null keys).
 """

@@ -131,7 +131,7 @@ def _git_commit_ts(path: str) -> float | None:
 def _module_files(mod_name: str) -> set[str]:
     """Repo-relative file of ``mod_name`` plus the in-package modules its
     source imports (one transitive level — covers the plan-module →
-    operator-module indirection, e.g. plans/social.py → operators/anomaly).
+    operator-module indirection, e.g. plans/task3.py → operators/anomaly).
     """
     import importlib
     import re

@@ -1,43 +1,31 @@
-"""Streaming Task 3 anomaly flagging (O1/O2/A12/F7 end-to-end): the batch
-spec (`operators/anomaly.py`, = `SN/validation/Task3Evaluator.java:45-98`)
-advanced one micro-batch at a time.
-
-State carried across batches (the reference's keyed ValueState + the
-broadcast Signatures, `AnomalousUserDetector.java:209-274`):
+"""Streaming Task 3 anomaly flagging (O1/O2/A12/F7 end-to-end): the
+Task 3 fold (`operators/anomaly.py::fold`, the batch query's own pass, =
+`SN/validation/Task3Evaluator.java:45-98`) advanced one micro-batch at a
+time. This module holds only the state the fold carries across batches
+(the reference's keyed ValueState + the broadcast Signatures,
+`AnomalousUserDetector.java:209-274`):
 
 - ``users``, the per-user ring buffers (last two activity timestamps) as
   a KEYED DELTA table: each batch appends one row per user active in it,
-  and the live view is the newest row per ``person_id``. It is joined
-  into each batch so ``lag(ts, 2)`` works across batch boundaries;
+  and the live view is the newest row per ``person_id``. It is the ring
+  the fold joins, so ``lag(ts, 2)`` works across batch boundaries;
 - ``sums``, the global per-feature running (sum, count) offsets — five
   exact BIGINT pairs (features are 1e-6 fixed-point), held driver-side
-  and folded into each batch's running sums as literals — plus the
-  ordering guard's clock (below).
+  and passed to the fold as its base sums — plus the ordering guard's
+  clock (below).
 
-Each batch is ONE materialized, observed pass built from SQL text
-(`durable.materialize`): the features, each user's new ring-buffer row
-(its newest activity of the batch and the one before), the range
-exchange on the total order and the per-range running sums of the
-range-prefix plan (`operators/prefix.py::range_running_sums`). The same
-job observes the per-range (sum, count) partials and the batch's
-``ts_ms`` span. The prefix offsets are then a projection on the
-materialized frame, and the flagged rows and ring-buffer rows are lazy
-filters of it: no unkeyed ``Window.orderBy`` anywhere (the widest window
-any reducer sees is one range, even when a micro-batch is 100× larger,
-VERDICT r5 #2), no partials collect, no persist. A batch is cut into one
-range per core (at most the shuffle width). Integer fixed-point sums are
-associative, so the fold is bit-identical to a single global ordered
-scan.
+Each batch is the fold's one materialized, observed pass: no partials
+collect, no persist, no unkeyed ``Window.orderBy`` (VERDICT r5 #2).
 
 Batches must arrive in event-time order (the evaluator's semantics is an
 ordered scan, and the newest ring-buffer row is the one with the greatest
-timestamps). The ordering guard enforces it: the observed ``ts_ms`` span
-costs no job, the last batch's max is kept with the sums registers (so a
-restarted or rolled-back detector still enforces it), and a batch that
-starts before it raises a ``ValueError`` naming both batch ids, before
-any state changes. Within a batch the fold orders by (ts_ms, id,
-person_id, kind) exactly like the batch plan, so the flagged set is
-identical to the batch query whatever the batch boundaries are.
+timestamps). The ordering guard enforces it: the fold observes the
+batch's ``ts_ms`` span at no extra job, the last batch's max is kept with
+the sums registers (so a restarted or rolled-back detector still enforces
+it), and a batch that starts before it raises a ``ValueError`` naming
+both batch ids, before any state changes. Within a batch the fold orders
+by (ts_ms, id, person_id, kind) exactly like the batch query, so the
+flagged set is identical to it whatever the batch boundaries are.
 
 Durability (O6, VERDICT r5 #1): with ``state_dir`` set, the state
 persists through the shared versioned-snapshot layer
@@ -60,55 +48,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.anomaly import FEATURES, HOUR_MS, Q
-from ..operators.prefix import range_partials, range_running_sums, range_totals
-from ..schemas import KIND_COMMENT, KIND_POST, KIND_REPLY
-from .durable import (
-    DurableComponent,
-    DurableTables,
-    local_frame,
-    materialize,
-    table,
-)
+from ..io.materialize import local_frame
+from ..operators.anomaly import FEATURES, RING_SCHEMA, fold
+from .durable import DurableComponent, DurableTables, table
 
-_USERS_SCHEMA = "person_id long, s0 long, s1 long"
 _SUMS_SCHEMA = "feature string, s long, c long"
 _FLAGGED_SCHEMA = "ts_ms long, user_id long"
 # the ordering guard's register, kept with the sums: (max ts_ms folded so
 # far, id of the batch that reached it)
 _CLOCK = "ts_ms"
-
-# The fold as SQL text: each Column call is a py4j round-trip, and the
-# Column form of this plan made thousands of them per batch.
-_ORDER = ["ts_ms", "id", "person_id", "kind"]
-_BY_USER = "OVER (PARTITION BY person_id ORDER BY ts_ms, id, kind)"
-_RATIO = r"size(array_distinct(split(content, '\\s+'))) / size(split(content, '\\s+'))"
-_COMMENT = f"kind IN ('{KIND_COMMENT}', '{KIND_REPLY}')"
-_POST = f"kind = '{KIND_POST}'"
-_FEATURE_SQL = {  # `operators/anomaly.py::user_features`, -1 = not applicable
-    "freq": "CASE WHEN t2 IS NOT NULL THEN "
-    f"floor({float(3 * HOUR_MS * Q)}D / greatest(ts_ms - t2, 1)) ELSE -1 END",
-    "clen": f"CASE WHEN {_COMMENT} THEN CAST(length(content) AS BIGINT) ELSE -1 END",
-    "plen": f"CASE WHEN {_POST} THEN CAST(length(content) AS BIGINT) ELSE -1 END",
-    "cratio": f"CASE WHEN {_COMMENT} THEN floor(({_RATIO}) * {Q}) ELSE -1 END",
-    "pratio": f"CASE WHEN {_POST} THEN floor(({_RATIO}) * {Q}) ELSE -1 END",
-}
-# the running sums skip the sentinels
-_VALUES = {f: f"CASE WHEN {f} != -1 THEN {f} END" for f in FEATURES}
-
-
-def _outside(f: str, lo: bool = True) -> str:
-    x = f"CAST({f} AS DOUBLE)"
-    far = f"{x} > 2.0D * {f}_avg"
-    if lo:
-        far = f"{x} < 0.5D * {f}_avg OR {far}"
-    return f"({f} != -1 AND ({far}))"
-
-
-# the threshold rule (frequency: only too high)
-_ABNORMAL = " OR ".join(
-    [_outside("freq", lo=False)] + [_outside(f) for f in FEATURES[1:]]
-)
 
 
 def _newest_per_user(users: DataFrame) -> DataFrame:
@@ -131,7 +79,7 @@ class StreamingAnomalyDetector(DurableComponent):
             spark,
             state_dir,
             fulls={"sums": _SUMS_SCHEMA},
-            deltas={"flagged": _FLAGGED_SCHEMA, "users": _USERS_SCHEMA},
+            deltas={"flagged": _FLAGGED_SCHEMA, "users": RING_SCHEMA},
             live={"users": _newest_per_user},
             on_reset=self._load_sums,
         )
@@ -150,90 +98,27 @@ class StreamingAnomalyDetector(DurableComponent):
         self._batch = batch_id
         return rolled_back
 
-    def _ranges(self) -> int:
-        # one range per core (capped by the shuffle width): a micro-batch
-        # is small, and a range per shuffle partition ran three 32-task
-        # stages over a few hundred rows
-        return min(
-            self.spark.sparkContext.defaultParallelism,
-            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-        )
-
-    # -- the fold ---------------------------------------------------------
-    def _scored(self, acts: DataFrame) -> DataFrame:
-        """The batch's one lazy pass: per-activity features, each user's
-        ring-buffer row (``__last`` marks the user's newest activity,
-        ``__prev`` the one before it), and the per-range running sums of
-        the range-prefix plan (no single-partition window)."""
-        # a merge join: the per-user window reuses its person_id
-        # partitioning, and AQE would otherwise turn it into a broadcast at
-        # run time — one more job for no saved exchange
-        joined = acts.selectExpr(
-            "ts_ms", "id", "kind", "person_id", "content"
-        ).join(self.state.live("users").hint("merge"), "person_id", "left")
-        # two-back timestamp: in-batch lag, else the carried ring buffer
-        windowed = joined.selectExpr(
-            "ts_ms", "id", "kind", "person_id", "content",
-            f"coalesce(lag(ts_ms, 2) {_BY_USER}, "
-            f"CASE row_number() {_BY_USER} WHEN 1 THEN s1 WHEN 2 THEN s0 END)"
-            " AS t2",
-            f"lead(ts_ms) {_BY_USER} IS NULL AS __last",
-            f"coalesce(lag(ts_ms) {_BY_USER}, s0) AS __prev",
-        )
-        feats = windowed.selectExpr(
-            "ts_ms", "id", "kind", "person_id", "__last", "__prev",
-            *[f"{e} AS {f}" for f, e in _FEATURE_SQL.items()],
-        )
-        return range_running_sums(
-            feats, _ORDER, _VALUES, num_partitions=self._ranges()
-        )
-
     def process_batch(self, acts: DataFrame) -> DataFrame:
         """Fold one event-time-ordered batch; returns its flagged rows."""
-        # one job: the per-range partials and the batch's time span are
-        # observed on the pass's own checkpoint
-        scored, seen = materialize(
-            self._scored(acts),
-            parts=range_partials(_VALUES, self._ranges()),
-            lo=F.min("ts_ms"),
-            hi=F.max("ts_ms"),
-        )
-        clock = self.sums.get(_CLOCK)
+        out = fold(acts, self.state.live("users"), self.sums)
+        seen, clock = out.seen, self.sums.get(_CLOCK)
         if clock and seen.lo is not None and seen.lo < clock[0]:
             raise ValueError(
                 f"batch {self._batch} starts at ts_ms {seen.lo}, before the "
                 f"end of batch {clock[1]} (ts_ms {clock[0]}): the anomaly "
                 "detector needs its batches in event-time order"
             )
-        totals, after = range_totals(
-            seen.parts, _VALUES, {f: self.sums[f] for f in FEATURES}
-        )
-        # try_divide: the count is 0 until a feature's first non-sentinel
-        # value, and null is the intended "no mean yet" (comparisons false)
-        avgs = [
-            f"try_divide(CAST({s} AS DOUBLE), {c}) AS {f}_avg"
-            for f, (s, c) in totals.items()
-        ]
-        # lazy over the checkpoint: the sink and the state write scan it
-        newly = (
-            scored.selectExpr("ts_ms", "person_id", *FEATURES, *avgs)
-            .filter(_ABNORMAL)
-            .selectExpr("ts_ms", "person_id AS user_id")
-        )
-        ring = scored.filter("__last").selectExpr(
-            "person_id", "ts_ms AS s0", "__prev AS s1"
-        )
-        self.sums.update({f: list(v) for f, v in after.items()})
+        self.sums.update({f: list(v) for f, v in out.sums.items()})
         if seen.hi is not None:
             self.sums[_CLOCK] = [seen.hi, self._batch]
         sums_rows = [(f, s, c) for f, (s, c) in self.sums.items()]
         self.state.fold({
-            "flagged": newly,
-            "users": ring,
+            "flagged": out.flagged,
+            "users": out.ring,
             "sums": local_frame(self.spark, _SUMS_SCHEMA, sums_rows),
         })
         self._batch += 1
-        return newly
+        return out.flagged
 
     def anomalies(self) -> DataFrame:
         return self.flagged

@@ -5,12 +5,14 @@ vector per activity (`SN/task/anomalydetection/AnomalousUserDetector.java:
 209-246`). Here the same state machine runs in ``applyInPandasWithState``:
 the ring survives across micro-batches in the (checkpointable, RocksDB-able)
 state store, and each batch's rows are processed in event order within the
-key — the batch form (`operators/anomaly.py`, window functions) is the
+key — the batch form (`operators/anomaly.py::user_features`) is the
 oracle this is tested against.
 """
 
 from __future__ import annotations
 
+import math
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -22,6 +24,9 @@ from ..operators.anomaly import HOUR_MS, Q
 from ..schemas import KIND_COMMENT, KIND_POST, KIND_REPLY
 
 _STATE_SCHEMA = "t0 long, t1 long, t2 long"
+# the spec's tokenizer, Java's \s+ (Spark's split): runs of ASCII
+# whitespace — Python's \s would also match Unicode spaces
+_TOKENS = re.compile(r"[ \t\n\x0b\f\r]+")
 _OUT_SCHEMA = (
     "person_id bigint, ts_ms bigint, id bigint, kind string, freq bigint, "
     "clen bigint, plen bigint, cratio bigint, pratio bigint"
@@ -39,15 +44,13 @@ def _feature_rows(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
                 # IEEE double division + floor, matching the batch plan's
                 # floor(1.08e13 / Δ) bit-for-bit (exact int // can differ
                 # by 1 when the double quotient rounds across an integer)
-                import math
-
                 freq = int(math.floor(float(3 * HOUR_MS * Q) / max(t0 - t2, 1)))
             else:
                 freq = -1
             clen = plen = cratio = pratio = -1
             content = row.content
             if row.kind in (KIND_COMMENT, KIND_REPLY, KIND_POST) and content is not None:
-                toks = content.split(" ")
+                toks = _TOKENS.split(content)
                 ratio = int(len(set(toks)) / len(toks) * Q)
                 if row.kind == KIND_POST:
                     plen, pratio = len(content), ratio

@@ -14,7 +14,7 @@ Each batch runs pointer-DOUBLING hops over (new rows ∪ pending): a hop
 either completes a row or jumps it two chain positions, so the loop exits
 after ``~log2(resolvable depth)+1`` hops. The exit test reads the hop's
 done / not-done counts, observed on the hop's own checkpoint
-(`durable.materialize`) — no probe job — instead of the r3 convergence
+(`io/materialize.py::materialize`) — no probe job — instead of the r3 convergence
 loop's one SINGLE-hop join + two blocking probes per chain level (up to
 128 driver-blocking jobs per batch, VERDICT r3 #5). Arrival order never
 matters: a reply that arrives before its parent waits in ``pending`` with
@@ -34,14 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.materialize import materialize
 from ..schemas import KIND_COMMENT, KIND_REPLY
-from .durable import (
-    DurableComponent,
-    DurableTables,
-    flat_checkpoint,
-    materialize,
-    table,
-)
+from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _RESOLVED_SCHEMA = "id long, root_post_id long"
 _PENDING_SCHEMA = "id long, parent_id long"

@@ -85,8 +85,9 @@ def test_uncommitted_edit_counts_as_changed_now():
 
 
 def test_module_files_follow_plan_to_operator_imports():
-    """plans/social.py implements task3 via operators/anomaly.py — a
-    change there must pull social's queries forward."""
+    """plans/social.py builds its queries on operators/resolve.py and
+    sources/activity.py — a change there must pull social's queries
+    forward."""
     files = R._module_files("eth_dspa_2019_spark.plans.social")
     assert "eth_dspa_2019_spark/plans/social.py" in files
     assert any("/operators/" in f or "/sources/" in f for f in files), files

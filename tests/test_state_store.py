@@ -408,7 +408,7 @@ def test_materialize_observes_rows_and_metrics(spark):
     nothing at run time — report rows == 0 without waiting on a metric."""
     import threading
 
-    from eth_dspa_2019_spark.streaming.durable import local_frame, materialize
+    from eth_dspa_2019_spark.io.materialize import local_frame, materialize
 
     df = (
         spark.range(0, 500, numPartitions=8)

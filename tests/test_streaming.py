@@ -171,6 +171,38 @@ def test_stateful_task3_features_equal_batch(spark, sf_dir, tmp_path):
     )
 
 
+def test_stateful_task3_features_split_on_whitespace_runs(spark):
+    """The stateful form tokenizes like the spec's split(content, '\\s+'):
+    a run of spaces or tabs is one separator ("a  a" is two tokens, one
+    distinct: cratio 500000), and only a leading or trailing run yields an
+    empty token. None of the replay documents above has such a run."""
+    import pandas as pd
+
+    from eth_dspa_2019_spark.operators.anomaly import user_features
+    from eth_dspa_2019_spark.streaming.features import _feature_rows
+
+    class _NewKey:  # the GroupState of a key seen for the first time
+        exists = False
+
+        def update(self, value):
+            pass
+
+    contents = [("comment", "a  a"), ("post", "b\tb c"), ("reply", " x \t y  x ")]
+    pdf = pd.DataFrame(
+        [(7, 1000 * i, i, kind, text) for i, (kind, text) in enumerate(contents)],
+        columns=["person_id", "ts_ms", "id", "kind", "content"],
+    )
+    got = next(_feature_rows((7,), iter([pdf]), _NewKey()))
+    batch = user_features(spark.createDataFrame(
+        pdf, "person_id long, ts_ms long, id long, kind string, content string"
+    ))
+    cols = list(got.columns)
+    assert sorted(map(tuple, got.itertuples(index=False))) == sorted(
+        map(tuple, batch.select(*cols).collect())
+    )
+    assert got["cratio"].tolist()[0] == 500_000
+
+
 def test_watermark_append_drops_only_incomplete_windows(spark, sf_dir, tmp_path):
     """Append mode + watermark: after a bounded replay the emitted windows
     are exactly the batch windows whose end precedes the final watermark
