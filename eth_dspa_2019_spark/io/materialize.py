@@ -3,13 +3,16 @@ by batch operators and streaming components alike.
 
 :func:`materialize` is an eager checkpoint that also OBSERVES the rows it
 writes (the row count plus any aggregates the caller asks for, at no
-extra job — the resolver exits its hop loop and the Task 3 fold advances
-its running sums on these counts), strips the origin plan's statistics,
-and RIGHT-SIZES the frame to the partition count Spark's file-split rule
-gives for its observed size. The few rows a caller builds on the driver
-(empty tables, sum registers, an empty ring buffer) are JVM relations
-(:func:`local_frame`), never Python-list frames that start a Python
-worker on every scan.
+extra job — the reply→root chase and the forest walk exit their loops
+and the Task 3 fold advances its running sums on these counts), strips
+the origin plan's statistics, and RIGHT-SIZES the frame to the partition
+count Spark's file-split rule gives for its observed size. The few rows
+a caller builds on the driver (empty tables, sum registers, an empty
+ring buffer) are JVM relations (:func:`local_frame`), never Python-list
+frames that start a Python worker on every scan. A frame built from
+checkpoints carries no size statistics, so a loop that joins one states
+its row bound and :func:`broadcast_if_fits` makes the broadcast choice
+Catalyst cannot.
 """
 
 from __future__ import annotations
@@ -23,7 +26,9 @@ from pyspark.serializers import CPickleSerializer
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["local_frame", "materialize"]
+from ..session import broadcast_threshold
+
+__all__ = ["broadcast_if_fits", "local_frame", "materialize"]
 
 
 def local_frame(
@@ -61,6 +66,16 @@ def local_frame(
     return spark.sql(
         f"SELECT * FROM VALUES {', '.join(tuples)} AS t({cols})", args=args
     )
+
+
+def broadcast_if_fits(df: DataFrame, rows: int) -> DataFrame:
+    """``F.broadcast(df)`` when ``rows × schema.defaultSize`` bytes fit the
+    session's ``spark.sql.autoBroadcastJoinThreshold``, else ``df``: the
+    auto-broadcast rule applied to a row bound the caller observed
+    (checkpointed relations carry no statistics, so Catalyst cannot make
+    the choice itself). A threshold of -1 never broadcasts."""
+    size = rows * df._jdf.schema().defaultSize()
+    return F.broadcast(df) if size < broadcast_threshold(df.sparkSession) else df
 
 
 def _partitions_for(spark: SparkSession, rows: int, row_bytes: int) -> int:
@@ -113,8 +128,8 @@ def materialize(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Row]:
       resets the leaf to the bounded default estimate, so per-batch
       stats stay a few thousand bits forever. The reset also disables
       auto-broadcast for these frames — standing state isn't
-      broadcastable at scale anyway, and the components hint
-      ``F.broadcast`` explicitly where they mean it.
+      broadcastable at scale anyway, and callers hint ``F.broadcast``
+      where they mean it (loops through :func:`broadcast_if_fits`).
 
     CLASSIC-MODE ONLY: the metric read, the right-sizing and the stats
     strip reach into py4j internals (``_jdf``, ``observedMetrics``,

@@ -26,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io.materialize import broadcast_if_fits, materialize
 from ..schemas import KIND_COMMENT, KIND_LIKE, KIND_POST, KIND_REPLY
-from ..session import broadcast_threshold
 
 BACKDATE_MS = 7_200_000  # 2 h deterministic perturbation
 BACKDATE_MOD = 17
@@ -85,23 +85,17 @@ def _forest_walk(acts: DataFrame, keep_semantics: bool | None = None) -> DataFra
     filter+project, False → C2 project, None → full frame.
     """
     posts = _posts_ts(acts)
-    # r12: one seed scan yields the reply probe AND the measured sizes
-    # that decide each per-level join's broadcast hint (big forests keep
-    # the shuffle joins; see session.broadcast_threshold).
-    n_posts, n_comments, n_replies = acts.agg(
+    # one seed scan sizes the posts join (big forests keep the shuffle
+    # join, `io/materialize.py::broadcast_if_fits`) and skips the level
+    # loop on a reply-free stream
+    n_posts, n_replies = acts.agg(
         F.count(F.when(F.col("kind") == KIND_POST, 1)),
-        F.count(F.when(F.col("kind") == KIND_COMMENT, 1)),
         F.count(F.when(F.col("kind") == KIND_REPLY, 1)),
     ).first()
-    bthresh = broadcast_threshold(acts.sparkSession)
-
-    def _maybe_bcast(df: DataFrame, n_rows: int, width: int) -> DataFrame:
-        return F.broadcast(df) if 0 <= n_rows * width < bthresh else df
-
     comments = (
         acts.filter(F.col("kind") == KIND_COMMENT)
         .join(
-            _maybe_bcast(posts, n_posts, 24), F.col("post_id") == F.col("pid")
+            broadcast_if_fits(posts, n_posts), F.col("post_id") == F.col("pid")
         )
         .select(
             "id",
@@ -111,30 +105,26 @@ def _forest_walk(acts: DataFrame, keep_semantics: bool | None = None) -> DataFra
             (F.col("raw_ts") > F.col("parent_ts")).alias("valid"),
         )
     )
-    done = comments.localCheckpoint(eager=True)
-    frontier = done
-    n_frontier = n_comments
+    done, seen = materialize(comments)
+    frontier, n_frontier = done, seen.rows
     # (no seed checkpoint: callers pass the materialized raw-stream cache,
     # so level 0 reads this filter straight off that checkpoint; later
-    # levels re-derive pending from their own materialized step — r11)
+    # levels re-derive pending from their own materialized step)
     pending = acts.filter(F.col("kind") == KIND_REPLY).select(
         "id", "kind", "raw_ts", "parent_id"
     )
-    # r11: one LEFT join materialization per level replaces the inner-join
-    # `hit` + anti-join `pending` pair — the matched rows ARE the level's
-    # hits and the unmatched rows ARE the next pending set, so both splits
-    # read the same checkpointed frame (guide §2.4: the anti-join
-    # duplicated a shuffle whose answer the left join already computed).
-    # Per level: 1 checkpoint + 1 count job instead of 2 checkpoints + 1
-    # count; the single count also reads both split sizes, so a forest
-    # with orphaned parents exits after the first no-progress level
-    # instead of spinning MAX_DEPTH empty rounds.
+    # One LEFT join materialization per level: the matched rows ARE the
+    # level's hits and the unmatched rows ARE the next pending set, so
+    # both splits read the same checkpointed frame, and the hit count
+    # observed on it sizes the next level's frontier join and ends the
+    # walk — a forest with orphaned parents exits after the first
+    # no-progress level instead of spinning MAX_DEPTH empty rounds.
     if n_replies > 0:
         for _ in range(MAX_DEPTH):
-            step = (
+            step, seen = materialize(
                 pending.alias("c")
                 .join(
-                    _maybe_bcast(frontier.alias("p"), n_frontier, 48),
+                    broadcast_if_fits(frontier.alias("p"), n_frontier),
                     F.col("c.parent_id") == F.col("p.id"),
                     "left",
                 )
@@ -151,13 +141,10 @@ def _forest_walk(acts: DataFrame, keep_semantics: bool | None = None) -> DataFra
                         F.col("p.valid")
                         & (F.col("c.raw_ts") > F.col("p.raw_ts"))
                     ).alias("valid"),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                hit=F.count_if("hitp"),
             )
-            n_hit, n_all = step.agg(
-                F.sum(F.col("hitp").cast("long")), F.count(F.lit(1))
-            ).first()
-            if not n_hit:
+            if not seen.hit:
                 break  # orphaned parents only — same output as before
             hit = step.filter("hitp").select(
                 "id", "kind", "raw_ts", "ts_fixed", "valid"
@@ -166,9 +153,8 @@ def _forest_walk(acts: DataFrame, keep_semantics: bool | None = None) -> DataFra
                 "id", "kind", "raw_ts", "parent_id"
             )
             done = done.unionByName(hit)
-            frontier = hit
-            n_frontier = n_hit  # the level's hit count sizes the next join
-            if n_hit == n_all:
+            frontier, n_frontier = hit, seen.hit
+            if seen.hit == seen.rows:
                 break  # nothing left pending
     if keep_semantics is True:
         return done.filter(F.col("valid")).select(

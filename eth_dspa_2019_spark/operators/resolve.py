@@ -3,14 +3,21 @@ stage (`SN/task/postidresolution/PostIdResolver.java:99-225` streaming with
 memcached+timers; batch spec `SN/validation/BatchPostIdResolver.java:54-91`,
 `SN/validation/GenerateExpectedMappings.java:25-57`).
 
-Spark-first design: the child→parent comment forest is resolved with a
-**pointer-doubling join fixpoint** — each iteration either resolves an entry
-(its parent is already resolved) or re-points it two hops up, so the number
-of iterations is O(log max_depth), each one an equi-join on the child id.
-No external K/V store, no per-record RPC: the mapping is an ordinary
-DataFrame, and at cluster scale each iteration is one hash-partitioned join
-of the (still-unresolved) mapping against itself. ``localCheckpoint``
-truncates the growing lineage between iterations.
+Spark-first design: the child→parent comment forest is resolved by ONE
+**pointer-doubling chase** (:func:`chase`) over a working set of
+``(id, ptr, acc)`` rows and an absorbing set of ``(id, root, depth)`` rows.
+Each hop left-joins the working rows to a lookup that holds every finished
+row plus the working rows themselves, so a row either completes (its
+pointer reached a finished node) or jumps to its parent's pointer — two
+chain positions — and the number of hops is O(log max_depth). No external
+K/V store, no per-record RPC: the state is an ordinary DataFrame, and each
+hop is one join materialized by ``io/materialize.py::materialize``, whose
+observed done count is the loop's exit test (no probe job).
+
+The batch queries (:func:`resolve_post_ids`, :func:`comment_depths`) run
+the chase from an empty state; the stream resolver
+(`streaming/resolution.py`) runs it once per micro-batch over its durable
+``resolved``/``pending`` state.
 
 The reference disambiguates overlapping post/comment id spaces with string
 key prefixes ``p_``/``r_`` in memcached (F13,
@@ -24,129 +31,140 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..io.materialize import broadcast_if_fits, materialize
 from ..schemas import KIND_COMMENT, KIND_LIKE, KIND_POST, KIND_REPLY
-from ..session import broadcast_threshold
 
-MAX_ITERS = 64  # supports comment-tree depth up to 2^64 — effectively unbounded
+#: doubling hops per chase: chains up to 2^64 deep complete in one call
+HOP_CAP = 64
+
+# the one row shape of the chase: a working row carries (ptr, acc), a
+# finished one (root, depth); ``done`` tells them apart
+_NOT_DONE = (
+    "id", "ptr", "acc", "CAST(NULL AS BIGINT) AS root",
+    "CAST(NULL AS BIGINT) AS depth", "false AS done",
+)
+_FINISHED = (
+    "id", "CAST(NULL AS BIGINT) AS ptr", "CAST(NULL AS BIGINT) AS acc",
+    "root", "depth", "true AS done",
+)
+# one hop: parent finished → take its root, depth = acc + parent depth;
+# parent still working → jump to ITS pointer, summing the collapsed edges;
+# parent unseen → hold
+_HOP = (
+    "c.id",
+    "if(m.id IS NULL, c.ptr, m.ptr) AS ptr",
+    "if(m.id IS NULL, c.acc, c.acc + m.acc) AS acc",
+    "m.root",
+    "c.acc + m.depth AS depth",
+    "coalesce(m.done, false) AS done",
+)
 
 
-def _pointer_chase_fixpoint(mapping: DataFrame, resolved_col: str, chase_cols) -> DataFrame:
-    """Shared pointer-doubling scaffold for :func:`resolve_post_ids` and
-    :func:`comment_depths`: split the seeded ``mapping`` into resolved /
-    dangling / working parts, iterate the chase join against the union of
-    every node's LATEST entry (what makes the chase pointer-DOUBLING),
-    re-split, and union all parts at the fixpoint. ``mapping`` must carry
-    ``id``, ``resolved_col`` (non-null ⇔ resolved), ``ptr`` (non-null ⇔
-    still chasing), plus any accumulator columns; ``chase_cols()`` takes
-    no arguments and returns the select list for one chase hop,
-    referencing columns via the fixed working (``u``) and lookup (``p``)
-    aliases — it must preserve the same column set.
+def _pruned_state_side(
+    absorbing: DataFrame, work: DataFrame, rows: int = 0
+) -> DataFrame:
+    """Restrict the absorbing set to the rows the chase join can match:
+    semi-join on the working set's pointers, so a standing state table is
+    scanned (with the pointer set pushed to the scan), never shuffled
+    whole. ``rows`` bounds the working set (the chase's seed count; the
+    default treats it as small): its pointers are broadcast when they fit
+    the session threshold. Duplicate pointers are harmless on the build
+    side of a semi-join."""
+    ptrs = work.selectExpr("ptr AS id")
+    return absorbing.join(broadcast_if_fits(ptrs, rows), "id", "semi")
 
-    Invariants the scaffold encodes (keep in ONE place): the lookup side
-    is parts ∪ working so chains halve per round; only the shrinking
-    working set is re-materialized per round (O(working) checkpoint
-    volume); danglers (ptr exhausted, still unresolved) split out so the
-    fixpoint terminates on dirty inputs with ``resolved_col`` NULL."""
-    # Seed through ONE keyed exchange before materializing: AQE sizes the
-    # partition count to the mapping's bytes (1-2 locally, N at scale),
-    # so every iteration frame checkpointed below inherits a
-    # data-proportional width instead of the input's task count — without
-    # this, each of the ~6-8 unioned lookup parts kept the full session
-    # parallelism and the per-iteration join paid hundreds of empty map
-    # tasks (guide §2.2: fewer, larger partitions).
-    mapping = mapping.repartition(F.col("id")).localCheckpoint(eager=True)
-    rcol = F.col(resolved_col)
-    parts = [mapping.filter(rcol.isNotNull())]
-    working = mapping.filter(rcol.isNull() & F.col("ptr").isNotNull())
-    parts.append(mapping.filter(rcol.isNull() & F.col("ptr").isNull()))
 
-    # r12: without a hint every chase hop plans as a two-sided shuffle
-    # join (~12 AQE stage jobs per round). Broadcast the lookup side when
-    # the MEASURED mapping bytes (the lookup side is always ⊆ the seed
-    # mapping) fit the session threshold; huge forests keep the shuffle.
-    row_bytes = 8 * (len(mapping.columns) + 1)
-    # one scan of the fresh checkpoint yields both the broadcast knob
-    # (total rows) and the loop-exit probe (working rows)
-    n_mapping, n_working = mapping.agg(
-        F.count(F.lit(1)),
-        F.count(F.when(rcol.isNull() & F.col("ptr").isNotNull(), 1)),
-    ).first()
-    bcast_lookup = 0 <= n_mapping * row_bytes < broadcast_threshold(
-        mapping.sparkSession
+def chase(
+    work: DataFrame, absorbing: DataFrame
+) -> tuple[DataFrame, DataFrame, int]:
+    """Chase every ``work`` row ``(id, ptr, acc)`` up its pointers until
+    it meets an ``absorbing`` row ``(id, root, depth)``; returns the lazy
+    finished rows ``(id, root, depth)`` — ``depth`` is the summed ``acc``
+    along the path plus the absorbing row's depth — the lazy rows still
+    pending ``(id, ptr, acc)``, their pointers advanced, and the seed's
+    row count, which bounds both frames (a caller sizes its joins of them
+    with it).
+
+    The seed working set is materialized once; its observed row count n
+    bounds every hop's lookup (the pruned absorbing side holds at most one
+    row per working pointer, the finished and working rows partition the
+    seed), so the broadcast choice is made once against 2n rows. Each hop
+    materializes its left join with the done count observed on it. Any
+    resolvable chain finishes its lowest pending row every hop, so a hop
+    that finishes nothing is the fixpoint; a hop that finishes every row
+    ends the chase too."""
+    work, seed = materialize(work.selectExpr(*_NOT_DONE))
+    n = seed.rows
+    pending, left = work, n
+    done = work.filter("false")
+    for _ in range(HOP_CAP):
+        if left == 0:
+            break
+        lookup = (
+            _pruned_state_side(absorbing, pending, n)
+            .selectExpr(*_FINISHED)
+            .unionByName(done)
+            .unionByName(pending)
+        )
+        step, seen = materialize(
+            pending.alias("c")
+            .join(
+                broadcast_if_fits(lookup, 2 * n).alias("m"),
+                F.expr("c.ptr = m.id"),
+                "left",
+            )
+            .selectExpr(*_HOP),
+            done=F.expr("count_if(done)"),
+        )
+        pending = step.filter("NOT done")
+        if seen.done == 0:
+            break
+        done = done.unionByName(step.filter("done"))
+        left = seen.rows - seen.done
+    return (
+        done.select("id", "root", "depth"),
+        pending.select("id", "ptr", "acc"),
+        n,
     )
 
-    def _hop(w: DataFrame, lookup: DataFrame) -> DataFrame:
-        if bcast_lookup:
-            lookup = F.broadcast(lookup)
-        return (
-            w.alias("u")
-            .join(lookup.alias("p"), F.col("u.ptr") == F.col("p.id"), "left")
-            .select(*chase_cols())
+
+def _chase_replies(
+    acts: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    """The chase from an empty state: replies are the work and comments
+    the absorbing rows (depth 1). Returns the comment rows and the
+    chase's finished rows, pending rows and seed count."""
+    comments = acts.filter(f"kind = '{KIND_COMMENT}'").selectExpr(
+        "id", "post_id AS root", "1L AS depth"
+    )
+    return comments, *chase(
+        acts.filter(f"kind = '{KIND_REPLY}'").selectExpr(
+            "id", "parent_id AS ptr", "1L AS acc"
+        ),
+        comments,
+    )
+
+
+def _forest(acts: DataFrame) -> DataFrame:
+    """``(id, root, depth)`` for every comment and reply. Rows still
+    pending (a parent never present) keep NULL ``root`` and ``depth``."""
+    comments, done, pending, _ = _chase_replies(acts)
+    return comments.unionByName(done).unionByName(
+        pending.selectExpr(
+            "id", "CAST(NULL AS BIGINT) AS root", "CAST(NULL AS BIGINT) AS depth"
         )
-
-    def _union(frames) -> DataFrame:
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
-    # TWO doubling hops per materialized round (r11): hop2 probes hop1's
-    # still-working rows against parts ∪ hop1 — hop1 is each node's
-    # latest state, so this is the same doubling applied twice; the round
-    # advances pointers 4× instead of 2× and the fixpoint needs half the
-    # rounds (⌈log₄ d⌉ materializations + empty-checks instead of
-    # ⌈log₂ d⌉). Per-round the hop1 subtree is referenced by four
-    # consumers inside ONE job — its exchanges are reused and only the
-    # working-set-sized join CPU repeats, which is what we trade for a
-    # driver-coordinated barrier + checkpoint write per round. Output is
-    # identical: a materialization boundary between two hops was never
-    # semantically relevant.
-    for _ in range(-(-MAX_ITERS // 2)):
-        if n_working == 0:
-            break
-        hop1 = _hop(working, _union([*parts, working]))
-        h1_work = hop1.filter(rcol.isNull() & F.col("ptr").isNotNull())
-        chased = _union(
-            [
-                hop1.filter(rcol.isNotNull()),
-                hop1.filter(rcol.isNull() & F.col("ptr").isNull()),
-                _hop(h1_work, _union([*parts, hop1])),
-            ]
-        ).localCheckpoint(eager=True)
-        parts.append(chased.filter(rcol.isNotNull()))
-        parts.append(chased.filter(rcol.isNull() & F.col("ptr").isNull()))
-        working = chased.filter(rcol.isNull() & F.col("ptr").isNotNull())
-        n_working = working.count()
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out.unionByName(working)
+    )
 
 
 def resolve_post_ids(acts: DataFrame) -> DataFrame:
-    """(child_id, root_post_id) for every comment and reply.
+    """(id, root_post_id) for every comment and reply.
 
     Comments carry their root directly (reply_to_postId); replies start as
     pointers to their parent comment/reply and are chased to the root by
-    pointer doubling.
+    pointer doubling (:func:`chase`). A reply whose chain never reaches a
+    comment keeps a NULL root.
     """
-    mapping = acts.filter(F.col("kind").isin(KIND_COMMENT, KIND_REPLY)).select(
-        "id",
-        F.when(F.col("kind") == KIND_COMMENT, F.col("post_id")).alias("root"),
-        F.when(F.col("kind") == KIND_REPLY, F.col("parent_id")).alias("ptr"),
-    )
-
-    # chase one hop: parent resolved → take its root; else point to the
-    # parent's parent (path doubling halves remaining chain depth)
-    def chase():
-        return [
-            F.col("u.id").alias("id"),
-            F.col("p.root").alias("root"),
-            F.col("p.ptr").alias("ptr"),
-        ]
-
-    out = _pointer_chase_fixpoint(mapping, "root", chase)
-    return out.select("id", F.col("root").alias("root_post_id"))
+    return _forest(acts).selectExpr("id", "root AS root_post_id")
 
 
 def resolved_activities(acts: DataFrame) -> DataFrame:
@@ -154,11 +172,13 @@ def resolved_activities(acts: DataFrame) -> DataFrame:
     post — the input to Tasks 1/2/3. Posts key by their own id, comments and
     likes by their direct target, replies by the chased root
     (`SN/util/Activity.java:75-77`)."""
-    mapping = resolve_post_ids(acts)
+    # only finished replies carry a root; the seed count sizes the join
+    _, done, _, rows = _chase_replies(acts)
+    roots = done.selectExpr("id AS rid", "root AS root_post_id")
     replies = (
         acts.filter(F.col("kind") == KIND_REPLY)
         .drop("post_id")
-        .join(mapping.withColumnRenamed("id", "rid"), F.col("id") == F.col("rid"), "left")
+        .join(broadcast_if_fits(roots, rows), F.col("id") == F.col("rid"), "left")
         .withColumn("post_id", F.col("root_post_id"))
         .drop("rid", "root_post_id")
     )
@@ -173,36 +193,11 @@ def comment_depths(acts: DataFrame) -> DataFrame:
     PostIdResolver.java` resolves identity; this measures the chains it
     chases).
 
-    Same pointer-doubling fixpoint as :func:`resolve_post_ids`, with a
-    hop ACCUMULATOR: an unresolved entry carries (ptr, acc) = "acc
-    original edges collapsed into this pointer"; chasing onto another
-    unresolved entry adds its acc (path doubling sums the two collapsed
-    segments exactly), chasing onto a resolved entry yields
-    acc + parent_depth. O(log max_depth) joins, same as resolution.
+    The same chase as :func:`resolve_post_ids`, read through its hop
+    ACCUMULATOR: a working row carries (ptr, acc) = "acc original edges
+    collapsed into this pointer"; jumping onto another working row adds
+    its acc (path doubling sums the two collapsed segments exactly), and
+    finishing on a row of known depth yields acc + that depth.
     Dangling chains (parent never present) keep depth NULL.
     """
-    mapping = acts.filter(F.col("kind").isin(KIND_COMMENT, KIND_REPLY)).select(
-        "id",
-        F.when(F.col("kind") == KIND_COMMENT, F.lit(1).cast("long")).alias(
-            "depth"
-        ),
-        F.when(F.col("kind") == KIND_REPLY, F.col("parent_id")).alias("ptr"),
-        F.when(F.col("kind") == KIND_REPLY, F.lit(1).cast("long")).alias(
-            "acc"
-        ),
-    )
-
-    # parent resolved → depth = acc + parent depth; else keep accumulating
-    # through the parent's own pointer (doubling sums collapsed segments)
-    def chase():
-        return [
-            F.col("u.id").alias("id"),
-            (F.col("u.acc") + F.col("p.depth")).alias("depth"),
-            F.col("p.ptr").alias("ptr"),
-            (F.col("u.acc") + F.coalesce(F.col("p.acc"), F.lit(0))).alias(
-                "acc"
-            ),
-        ]
-
-    out = _pointer_chase_fixpoint(mapping, "depth", chase)
-    return out.select("id", "depth")
+    return _forest(acts).select("id", "depth")

@@ -94,7 +94,7 @@ def _walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.cleaning import _forest_walk
 
     # no outer checkpoint: the walk's per-level frames are already
-    # localCheckpointed, so the cached plan is a cheap union of
+    # materialized, so the cached plan is a cheap union of
     # materialized RDDs (and Spark 4's constraint rewrite rejects a
     # checkpoint directly on that union).
     return _forest_walk(_raw_acts(spark, sf_dir))

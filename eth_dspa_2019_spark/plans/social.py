@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.cache import query_data
-from ..operators.resolve import resolve_post_ids, resolved_activities
+from ..operators.resolve import resolved_activities
+from ..schemas import KIND_COMMENT, KIND_REPLY
 from ..sources.activity import LANGS, load_activities
 from .registry import register
 
@@ -144,11 +145,14 @@ def activity_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def reply_post_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch reply→root-post resolution via pointer-doubling join fixpoint
-    (J1/J5/O2 batch spec) vs the oracle's recursive CTE."""
-    mapping = resolve_post_ids(load_activities(spark, sf_dir))
-    return mapping.select(
-        F.col("id").alias("child_id"), "root_post_id"
+    """Batch reply→root-post resolution via the pointer-doubling chase
+    (J1/J5/O2 batch spec) vs the oracle's recursive CTE: the comment and
+    reply rows of the session's resolved stream, so one social pass
+    chases the forest once."""
+    return (
+        _resolved(spark, sf_dir)
+        .filter(f"kind IN ('{KIND_COMMENT}', '{KIND_REPLY}')")
+        .selectExpr("id AS child_id", "post_id AS root_post_id")
     )
 
 

@@ -17,9 +17,12 @@ from ..sources.activity import load_activities
 from .registry import register
 from .social import _O_ACTS, _O_BASE
 
+# Java's `\s` class, as the engine's `split(content, '\\s+')` uses it —
+# RE2's `\s` leaves out the vertical tab
+_WS = "'[ \\t\\n\\x0b\\f\\r]+'"
 _RATIO = (
-    "len(list_distinct(regexp_split_to_array(content, '\\s+')))"
-    " / len(regexp_split_to_array(content, '\\s+'))"
+    f"len(list_distinct(regexp_split_to_array(content, {_WS})))"
+    f" / len(regexp_split_to_array(content, {_WS}))"
 )
 
 _O_FEATS = f"""

@@ -72,10 +72,12 @@ def get_spark(
 
 def broadcast_threshold(spark: SparkSession) -> int:
     """``spark.sql.autoBroadcastJoinThreshold`` in bytes (a size-suffixed
-    value falls back to 10 MiB). The loop operators (resolve, the forest
-    walk, the graph loops) compare their measured relation sizes to it:
-    checkpointed-RDD relations carry no statistics, so Catalyst cannot
-    make the broadcast choice itself (guide §3.1)."""
+    value falls back to 10 MiB). Its readers are the one broadcast rule
+    for loop frames (`io/materialize.py::broadcast_if_fits`, used by the
+    reply→root chase and the forest walk) and the graph loops: both
+    compare measured relation sizes to it, because checkpointed-RDD
+    relations carry no statistics and Catalyst cannot make the broadcast
+    choice itself (guide §3.1)."""
     try:
         return int(
             spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")

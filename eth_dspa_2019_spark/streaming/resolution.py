@@ -10,16 +10,14 @@ the timers with two engine-managed state tables advanced per micro-batch:
   parks in keyed state and retries from ``onTimer``; here the retry is
   simply the next batch's chase, resumed from the COMPRESSED pointer).
 
-Each batch runs pointer-DOUBLING hops over (new rows ∪ pending): a hop
-either completes a row or jumps it two chain positions, so the loop exits
-after ``~log2(resolvable depth)+1`` hops. The exit test reads the hop's
-done / not-done counts, observed on the hop's own checkpoint
-(`io/materialize.py::materialize`) — no probe job — instead of the r3 convergence
-loop's one SINGLE-hop join + two blocking probes per chain level (up to
-128 driver-blocking jobs per batch, VERDICT r3 #5). Arrival order never
-matters: a reply that arrives before its parent waits in ``pending`` with
-whatever progress its pointer made, until some later batch delivers the
-parent (or its transitively-resolved ancestor).
+Each batch runs the engine's one pointer-doubling chase
+(`operators/resolve.py::chase`) with (new replies ∪ pending) as the work
+and (``resolved`` ∪ the batch's comments) as the absorbing rows: a hop
+either completes a row or jumps it two chain positions, and the chase
+exits on the done count observed on the hop's own checkpoint — no probe
+job. Arrival order never matters: a reply that arrives before its parent
+waits in ``pending`` with whatever progress its pointer made, until some
+later batch delivers the parent (or its transitively-resolved ancestor).
 
 Durability (O6): with ``state_dir`` set, ``pending`` (plus the emit
 stage's ``parked`` reply rows) persists as full tables and ``resolved`` as
@@ -34,25 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io.materialize import materialize
+from ..operators.resolve import chase
 from ..schemas import KIND_COMMENT, KIND_REPLY
 from .durable import DurableComponent, DurableTables, flat_checkpoint, table
 
 _RESOLVED_SCHEMA = "id long, root_post_id long"
 _PENDING_SCHEMA = "id long, parent_id long"
 _PARKED_SCHEMA = "kind string, id long, person_id long, ts_ms long, parent_id long"
-# safety cap on doubling hops: 2^16 = 65 536-deep chains per single batch
-_MAX_HOPS = 16
-
-
-def _pruned_state_side(resolved_all: DataFrame, work: DataFrame) -> DataFrame:
-    """Restrict the historical state to the rows the chase join can match:
-    semi-join on the working set's pointers (broadcast — the working set
-    is micro-batch-bounded, the state is not; duplicate pointers are
-    harmless on the build side of a semi-join). Factored out so the plan
-    shape is unit-assertable."""
-    ptrs = work.select(F.col("ptr").alias("id"))
-    return resolved_all.join(F.broadcast(ptrs), "id", "semi")
 
 
 class IncrementalResolver(DurableComponent):
@@ -78,108 +64,38 @@ class IncrementalResolver(DurableComponent):
             deltas={"resolved": _RESOLVED_SCHEMA},
         )
 
-    # -- the chase --------------------------------------------------------
     def process_batch(self, acts: DataFrame) -> DataFrame:
         """Fold one micro-batch of parsed activities into the state; returns
         the mappings newly resolved by this batch."""
-        new_resolved = acts.filter(F.col("kind") == KIND_COMMENT).select(
-            "id", F.col("post_id").alias("root_post_id")
+        new_resolved = acts.filter(f"kind = '{KIND_COMMENT}'").selectExpr(
+            "id", "post_id AS root_post_id"
         )
-        resolved_all = self.resolved.unionByName(new_resolved)
         work = (
-            acts.filter(F.col("kind") == KIND_REPLY)
+            acts.filter(f"kind = '{KIND_REPLY}'")
             .select("id", "parent_id")
             .unionByName(self.pending)
-            .select("id", F.col("parent_id").alias("ptr"))
+            .selectExpr("id", "parent_id AS ptr", "CAST(NULL AS BIGINT) AS acc")
         )
-        # Pointer-DOUBLING chase with a shrinking working set: the lookup
-        # side carries every finished mapping (absorbing: id → root) PLUS
-        # the working rows' own pointers, so each hop either completes a
-        # row (its pointer reached a resolved node) or jumps it two chain
-        # positions. Any resolvable chain completes its bottom row every
-        # hop, so "a hop completed nothing" IS the fixpoint — the hop
-        # count is ~log2(resolvable depth)+1 (vs the r3 convergence loop:
-        # one SINGLE-hop join + 2 blocking probes per chain LEVEL, up to
-        # 128 driver jobs per batch). Each hop materializes ONE frame, the
-        # chased working set (keeping the chase lazy instead doubles the
-        # plan tree per hop and re-executes the join cascade per probe,
-        # measured exponential); the fixpoint check reads the done/not-done
-        # counts observed on that same checkpoint, so it launches no job.
-        # Chains deeper than 2^_MAX_HOPS carry their compressed pointers to
-        # the next batch.
-        done_parts: list[DataFrame] = []
-        for _ in range(_MAX_HOPS):
-            # A hop only ever matches state rows whose id equals some
-            # working pointer, so the state side is semi-joined down to
-            # O(|work|) rows BEFORE the chase join — the full historical
-            # `resolved` table is scanned (with the ptr-set pushed to the
-            # scan), never shuffled. The working set is bounded by the
-            # micro-batch plus still-pending replies, so broadcasting its
-            # pointers — and the O(|work|)-row lookup built from them — is
-            # cheap even when the state is huge.
-            lookup = _pruned_state_side(resolved_all, work).select(
-                F.col("id").alias("x"),
-                F.col("root_post_id").alias("nxt"),
-                F.lit(True).alias("mdone"),
-            )
-            for part in done_parts:
-                lookup = lookup.unionByName(
-                    part.select(
-                        F.col("id").alias("x"),
-                        F.col("ptr").alias("nxt"),
-                        F.lit(True).alias("mdone"),
-                    )
-                )
-            lookup = lookup.unionByName(
-                work.select(
-                    F.col("id").alias("x"),
-                    F.col("ptr").alias("nxt"),
-                    F.lit(False).alias("mdone"),
-                )
-            )
-            # parent resolved → absorb its root; parent in the working set
-            # → jump to ITS pointer (path doubling); parent unseen → hold
-            chased, seen = materialize(
-                work.alias("c")
-                .join(
-                    F.broadcast(lookup).alias("m"),
-                    F.col("c.ptr") == F.col("m.x"),
-                    "left",
-                )
-                .select(
-                    F.col("c.id").alias("id"),
-                    F.when(F.col("m.x").isNull(), F.col("c.ptr"))
-                    .otherwise(F.col("m.nxt"))
-                    .alias("ptr"),
-                    F.coalesce(F.col("m.mdone"), F.lit(False)).alias("done"),
-                ),
-                done=F.count_if("done"),
-            )
-            # hit/work are lazy filters over the CHECKPOINTED chased frame
-            hit = chased.filter(F.col("done")).select("id", "ptr")
-            work = chased.filter(~F.col("done")).select("id", "ptr")
-            if seen.done == 0:
-                break  # nothing else resolvable this batch → stays pending
-            done_parts.append(hit)
-            if seen.done == seen.rows:
-                break  # everything resolved — skip the would-be-empty hop
-        delta = new_resolved
-        for part in done_parts:
-            delta = delta.unionByName(
-                part.select("id", F.col("ptr").alias("root_post_id"))
-            )
+        done, pending, _ = chase(
+            work,
+            self.resolved.unionByName(new_resolved).selectExpr(
+                "id", "root_post_id AS root", "CAST(NULL AS BIGINT) AS depth"
+            ),
+        )
         # Checkpoint ONLY the batch's delta (O(batch) blocks); the layer
         # extends `resolved` as a lazy union over checkpointed parts. The
         # eager checkpoint also cuts every reference to the micro-batch
         # frame, which is not valid after the batch ends.
-        delta = flat_checkpoint(delta)
+        delta = flat_checkpoint(
+            new_resolved.unionByName(done.selectExpr("id", "root AS root_post_id"))
+        )
         # pending carries the ADVANCED pointer — cross-batch path
         # compression: a chain of depth d resolves in O(log d) total hops
-        # no matter how it splits across batches
-        pending = work.select(
-            "id", F.col("ptr").alias("parent_id")
-        ).transform(flat_checkpoint)
-        self.state.fold({"resolved": delta, "pending": pending})
+        # no matter how it splits across batches. It is a narrow filter of
+        # the chase's last checkpoint, so it needs no checkpoint of its own.
+        self.state.fold(
+            {"resolved": delta, "pending": pending.selectExpr("id", "ptr AS parent_id")}
+        )
         return delta
 
     def mappings(self) -> DataFrame:

@@ -78,3 +78,27 @@ def test_fixed_band_corr_fixture_matches_static_oracle(spark, sf_dir):
         _CORR_PRUNED_ORACLE_FIXED,
         sf_dir,
     )
+
+
+def test_task3_ratio_oracle_splits_on_vertical_tabs(spark, sf_dir, tmp_path):
+    """The Task 3 oracle tokenizes content on Java's ``\\s`` class, the one
+    the engine's ``split(content, '\\\\s+')`` uses: RE2's ``\\s`` leaves out
+    the vertical tab, so a document whose first space is a vertical tab
+    gets a different ``cratio``/``pratio`` unless the oracle spells the
+    class out."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from eth_dspa_2019_spark.io.readers import TESTDATA_TABLES
+
+    for t in TESTDATA_TABLES:
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    text = pc.replace_substring(docs.column("text"), " ", "\x0b", max_replacements=1)
+    assert pc.any(pc.match_substring(text, "\x0b")).as_py()
+    docs = docs.set_column(docs.schema.get_field_index("text"), "text", text)
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    spec = all_queries()["task3_user_features"]
+    compare(spec.spark(spark, str(tmp_path)), spec.oracle, str(tmp_path))

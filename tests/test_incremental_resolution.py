@@ -296,7 +296,7 @@ def test_chase_state_side_is_semi_join_pruned(spark):
     """Verdict r4 #6: the chase join's state side touches O(|work|) rows —
     the historical `resolved` table is semi-joined (broadcast) on the
     working set's pointers before the join, never shuffled whole."""
-    from eth_dspa_2019_spark.streaming.resolution import _pruned_state_side
+    from eth_dspa_2019_spark.operators.resolve import _pruned_state_side
 
     resolved_all = spark.createDataFrame(
         [(i, i * 10) for i in range(1000)], "id long, root_post_id long"
@@ -307,3 +307,110 @@ def test_chase_state_side_is_semi_join_pruned(spark):
     assert "LeftSemi" in plan and "Broadcast" in plan
     # semantics: exactly the state rows the working pointers can reach
     assert sorted(map(tuple, pruned.collect())) == [(3, 30), (7, 70)]
+
+
+def _jobs(spark, group, fn):
+    """Spark job ids ``fn()`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:  # a null value removes the property
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_batch_chase_job_budget(spark, sf_dir):
+    """The batch callers of the one chase, built and collected over the
+    session's parsed activities: the seed checkpoint, then per hop the
+    observed join and its broadcasts — no probe jobs (at most 8 each)."""
+    from eth_dspa_2019_spark.operators.resolve import comment_depths
+
+    acts = load_activities(spark, sf_dir)
+    for name, fn in (
+        ("resolve_post_ids", resolve_post_ids),
+        ("comment_depths", comment_depths),
+    ):
+        jobs = _jobs(spark, f"test-chase-{name}", lambda: fn(acts).toArrow())
+        assert 0 < len(jobs) <= 8, (name, jobs)
+
+
+def test_resolver_steady_batch_job_budget(spark, sf_dir, tmp_path):
+    """A steady resolver micro-batch (begin, fold, commit with durable
+    state; batch 2 of 3 event-time chunks) launches at most 10 jobs: the
+    chase's seed checkpoint replaces the pending checkpoint, so the
+    chase adds no job to the batch."""
+    acts = load_activities(spark, sf_dir)
+    lo, hi = acts.agg(F.min("ts_ms"), F.max("ts_ms")).first()
+    cuts = [lo + (hi - lo) * i // 3 for i in range(3)] + [hi + 1]
+    chunks = [
+        acts.filter((F.col("ts_ms") >= a) & (F.col("ts_ms") < b)).localCheckpoint()
+        for a, b in zip(cuts[:-1], cuts[1:])
+    ]
+    r = IncrementalResolver(spark, state_dir=str(tmp_path / "state"))
+    for bid, chunk in enumerate(chunks[:2]):
+
+        def fold(bid=bid, chunk=chunk):
+            r.begin_batch(bid)
+            r.process_batch(chunk)
+            r.commit(bid)
+
+        jobs = _jobs(spark, f"test-resolver-batch-{bid}", fold)
+    assert 0 < len(jobs) <= 10, jobs
+
+
+def test_chase_honours_a_disabled_broadcast_threshold(spark, sf_dir, monkeypatch):
+    """With ``spark.sql.autoBroadcastJoinThreshold=-1`` neither caller of
+    the chase plans a broadcast (its one broadcast rule reads the
+    threshold), and the batch mapping equals the default run's."""
+    from eth_dspa_2019_spark.operators import resolve
+
+    plans = []
+    real = resolve.materialize
+
+    def recording(df, **metrics):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, **metrics)
+
+    monkeypatch.setattr(resolve, "materialize", recording)
+    acts = load_activities(spark, sf_dir)
+    want = _mapping_rows(resolve_post_ids(acts))
+    assert any("BroadcastExchange" in p for p in plans)  # the default run does
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plans.clear()
+        got = _mapping_rows(resolve_post_ids(acts))
+        r = IncrementalResolver(spark)
+        r.process_batch(acts)
+        streamed = _mapping_rows(r.mappings())
+        forced = list(plans)
+    finally:
+        spark.conf.set(key, old)
+    assert len(forced) > 2  # both callers' seeds and hops were planned
+    assert not any("BroadcastExchange" in p for p in forced)
+    assert got == want
+    assert streamed == [row for row in want if row[1] is not None]
+
+
+def test_one_pointer_chase_without_probes():
+    """The reply→root chase lives in ``operators/resolve.py`` and the
+    stream resolver only folds its state: neither module runs a probe
+    job or its own checkpoint, and only the session, the broadcast rule
+    (``io/materialize.py``) and the graph loops read the broadcast
+    threshold."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "eth_dspa_2019_spark"
+    for rel in ("operators/resolve.py", "streaming/resolution.py"):
+        src = (pkg / rel).read_text()
+        for probe in ("localCheckpoint", ".count()", ".first()"):
+            assert probe not in src, (rel, probe)
+    readers = {
+        str(f.relative_to(pkg))
+        for f in pkg.rglob("*.py")
+        if "broadcast_threshold" in f.read_text()
+    }
+    assert readers == {"session.py", "io/materialize.py", "plans/graph.py"}
