@@ -3,8 +3,9 @@ by batch operators and streaming components alike.
 
 :func:`materialize` is an eager checkpoint that also OBSERVES the rows it
 writes (the row count plus any aggregates the caller asks for, at no
-extra job — the reply→root chase and the forest walk exit their loops
-and the Task 3 fold advances its running sums on these counts), strips
+extra job — the reply→root chase, the forest walk, the graph loops and
+the dedup components exit their loops and the Task 3 fold advances its
+running sums on these counts), strips
 the origin plan's statistics, and RIGHT-SIZES the frame to the partition
 count Spark's file-split rule gives for its observed size. The few rows
 a caller builds on the driver (empty tables, sum registers, an empty

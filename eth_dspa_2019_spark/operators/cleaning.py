@@ -84,18 +84,13 @@ def _forest_walk(acts: DataFrame, keep_semantics: bool | None = None) -> DataFra
     keep_semantics retains the legacy projection behavior: True → C1
     filter+project, False → C2 project, None → full frame.
     """
-    posts = _posts_ts(acts)
-    # one seed scan sizes the posts join (big forests keep the shuffle
-    # join, `io/materialize.py::broadcast_if_fits`) and skips the level
-    # loop on a reply-free stream
-    n_posts, n_replies = acts.agg(
-        F.count(F.when(F.col("kind") == KIND_POST, 1)),
-        F.count(F.when(F.col("kind") == KIND_REPLY, 1)),
-    ).first()
+    # the posts side's observed rows size its join (big forests keep the
+    # shuffle join, `io/materialize.py::broadcast_if_fits`)
+    posts, seen = materialize(_posts_ts(acts))
     comments = (
         acts.filter(F.col("kind") == KIND_COMMENT)
         .join(
-            broadcast_if_fits(posts, n_posts), F.col("post_id") == F.col("pid")
+            broadcast_if_fits(posts, seen.rows), F.col("post_id") == F.col("pid")
         )
         .select(
             "id",
@@ -119,43 +114,42 @@ def _forest_walk(acts: DataFrame, keep_semantics: bool | None = None) -> DataFra
     # observed on it sizes the next level's frontier join and ends the
     # walk — a forest with orphaned parents exits after the first
     # no-progress level instead of spinning MAX_DEPTH empty rounds.
-    if n_replies > 0:
-        for _ in range(MAX_DEPTH):
-            step, seen = materialize(
-                pending.alias("c")
-                .join(
-                    broadcast_if_fits(frontier.alias("p"), n_frontier),
-                    F.col("c.parent_id") == F.col("p.id"),
-                    "left",
-                )
-                .select(
-                    F.col("c.id").alias("id"),
-                    F.col("c.kind").alias("kind"),
-                    F.col("c.raw_ts").alias("raw_ts"),
-                    F.col("c.parent_id").alias("parent_id"),
-                    F.col("p.id").isNotNull().alias("hitp"),
-                    _fix(F.col("c.raw_ts"), F.col("p.ts_fixed")).alias(
-                        "ts_fixed"
-                    ),
-                    (
-                        F.col("p.valid")
-                        & (F.col("c.raw_ts") > F.col("p.raw_ts"))
-                    ).alias("valid"),
+    for _ in range(MAX_DEPTH):
+        step, seen = materialize(
+            pending.alias("c")
+            .join(
+                broadcast_if_fits(frontier.alias("p"), n_frontier),
+                F.col("c.parent_id") == F.col("p.id"),
+                "left",
+            )
+            .select(
+                F.col("c.id").alias("id"),
+                F.col("c.kind").alias("kind"),
+                F.col("c.raw_ts").alias("raw_ts"),
+                F.col("c.parent_id").alias("parent_id"),
+                F.col("p.id").isNotNull().alias("hitp"),
+                _fix(F.col("c.raw_ts"), F.col("p.ts_fixed")).alias(
+                    "ts_fixed"
                 ),
-                hit=F.count_if("hitp"),
-            )
-            if not seen.hit:
-                break  # orphaned parents only — same output as before
-            hit = step.filter("hitp").select(
-                "id", "kind", "raw_ts", "ts_fixed", "valid"
-            )
-            pending = step.filter(~F.col("hitp")).select(
-                "id", "kind", "raw_ts", "parent_id"
-            )
-            done = done.unionByName(hit)
-            frontier, n_frontier = hit, seen.hit
-            if seen.hit == seen.rows:
-                break  # nothing left pending
+                (
+                    F.col("p.valid")
+                    & (F.col("c.raw_ts") > F.col("p.raw_ts"))
+                ).alias("valid"),
+            ),
+            hit=F.count_if("hitp"),
+        )
+        if not seen.hit:
+            break  # no reply left, or orphaned parents only
+        hit = step.filter("hitp").select(
+            "id", "kind", "raw_ts", "ts_fixed", "valid"
+        )
+        pending = step.filter(~F.col("hitp")).select(
+            "id", "kind", "raw_ts", "parent_id"
+        )
+        done = done.unionByName(hit)
+        frontier, n_frontier = hit, seen.hit
+        if seen.hit == seen.rows:
+            break  # nothing left pending
     if keep_semantics is True:
         return done.filter(F.col("valid")).select(
             "id", "kind", F.col("raw_ts").alias("ts_ms")

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import MERSENNE31, h64, perm_coeffs
 from ..functions.text import tokens
+from ..io.materialize import broadcast_if_fits, materialize
 
 
 def shingles(
@@ -479,74 +480,58 @@ def dedup_clusters(pairs: DataFrame) -> DataFrame:
     label over the neighborhood, then contracts label chains with a
     label-of-label join (lbl ← lbl[lbl]) — the classic shortcutting step
     that turns O(diameter) rounds into O(log diameter), so even
-    adversarial long-chain graphs converge in a handful of joins. The
-    convergence count() runs every CHECK_EVERY rounds (it is a full driver
-    sync; batching halves the round-trips). No driver-side graph, no
-    GraphFrames dependency.
+    adversarial long-chain graphs converge in a handful of joins. Each
+    round is one materialized pass that observes how many labels it
+    changed; the loop exits at the first round that changes none. No
+    driver-side graph, no GraphFrames dependency.
     """
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(
-                F.col("doc_b").alias("a"), F.col("doc_a").alias("b")
-            )
-        )
+    # materialize: the propagation loop re-reads edges every round —
+    # without this the whole upstream pair pipeline re-runs per round
+    edges, _ = materialize(
+        pairs.selectExpr("doc_a AS a", "doc_b AS b")
+        .unionByName(pairs.selectExpr("doc_b AS a", "doc_a AS b"))
         .distinct()
-        # materialize: the propagation loop re-reads edges every round —
-        # without this the whole upstream pair pipeline re-runs per round
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels, seen = materialize(
         edges.groupBy("a")
         .agg(F.min("b").alias("mb"))
-        .select(
-            F.col("a").alias("id"), F.least(F.col("a"), F.col("mb")).alias("lbl")
-        )
-        .localCheckpoint(eager=True)
+        .selectExpr("a AS id", "least(a, mb) AS lbl")
     )
-    # r11: the convergence probe is a CHANGE FLAG carried through the
-    # round's own materialization — each round knows its pre-round label,
-    # so `chg` is a free projection column and the fixpoint check is a
-    # limit(1) scan of the just-checkpointed round instead of a separate
-    # labels⋈prev join every CHECK_EVERY rounds. The scan is cheap enough
-    # to run every round, so the loop exits at the FIRST no-change round
-    # (a no-change round is a fixpoint of deterministic ops — identical
-    # labels, fewer wasted rounds than the batched-check form).
-    for rnd in range(64):
+    # r11: the fixpoint check is a CHANGE count carried by the round's
+    # own materialization — each round knows its pre-round label, so the
+    # count is observed on the checkpoint the round writes anyway, and
+    # the loop exits at the FIRST no-change round (a no-change round is
+    # a fixpoint of deterministic ops — identical labels). Every node has
+    # one label row, so the observed label count bounds each relation
+    # the round broadcasts.
+    n = seen.rows
+    for _ in range(64):
         # neighbor-min pass: lbl'(v) = min(lbl(v), min over neighbors lbl(u))
         nbr = (
-            edges.join(labels, edges.b == labels.id)
+            edges.join(broadcast_if_fits(labels, n), F.col("b") == F.col("id"))
             .groupBy("a")
             .agg(F.min("lbl").alias("nlbl"))
         )
-        nxt = labels.join(nbr, labels.id == nbr.a, "left").select(
-            "id",
-            F.col("lbl").alias("old_lbl"),
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-            ).alias("lbl"),
+        nxt = labels.join(
+            broadcast_if_fits(nbr, n), F.col("id") == F.col("a"), "left"
+        ).selectExpr(
+            "id", "lbl AS old_lbl", "least(lbl, coalesce(nlbl, lbl)) AS lbl"
         )
         # pointer jump: lbl''(v) = lbl'(lbl'(v)) — shortcut label chains
         # (every label is itself a node id, so the self-join is total)
-        jump = nxt.select(
-            F.col("id").alias("jid"), F.col("lbl").alias("jlbl")
-        )
-        new_lbl = F.least(
-            F.col("lbl"), F.coalesce(F.col("jlbl"), F.col("lbl"))
-        )
-        step = (
-            nxt.join(jump, nxt.lbl == jump.jid, "left")
-            .select(
-                "id",
-                new_lbl.alias("lbl"),
-                (new_lbl != F.col("old_lbl")).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
+        jump = nxt.selectExpr("id AS jid", "lbl AS jlbl")
+        step, seen = materialize(
+            nxt.join(
+                broadcast_if_fits(jump, n), F.col("lbl") == F.col("jid"), "left"
+            ).selectExpr(
+                "id", "least(lbl, coalesce(jlbl, lbl)) AS lbl", "old_lbl"
+            ),
+            changed=F.count_if(F.col("lbl") != F.col("old_lbl")),
         )
         labels = step.select("id", "lbl")
-        if step.filter("chg").limit(1).count() == 0:
+        if not seen.changed:
             break
-    return labels.select("id", F.col("lbl").alias("cluster_id"))
+    return labels.selectExpr("id", "lbl AS cluster_id")
 
 
 def simhash(

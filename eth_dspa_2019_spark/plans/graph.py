@@ -25,11 +25,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.materialize import broadcast_if_fits, local_frame, materialize
 from ..io.readers import load_table
-from ..session import broadcast_threshold
+from ..io.stats import table_stats
 from .registry import register
 
 TRI_FAN = 3  # synthesized neighbors per user
+
+
+def _users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "events").select("user_id").distinct()
+
+
+def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The synthesized user graph, (a, b) with a < b, lazy: the Spark form
+    of :func:`_o_edges`. Each query materializes the form it loops on."""
+    n = table_stats(spark, sf_dir, "events")["max_user_id"] + 1
+    probes = ", ".join(
+        f"(user_id * 7 + {11 * j}) % {n}" for j in range(1, TRI_FAN + 1)
+    )
+    return (
+        _users(spark, sf_dir)
+        .selectExpr("user_id AS u", f"explode(array({probes})) AS v")
+        .filter("u <> v")
+        .selectExpr("least(u, v) AS a", "greatest(u, v) AS b")
+        .distinct()
+    )
+
+
+def _arcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v): every edge in both directions, lazy."""
+    edges = _edges(spark, sf_dir)
+    return edges.selectExpr("a AS u", "b AS v").unionByName(
+        edges.selectExpr("b AS u", "a AS v")
+    )
 
 
 def _o_edges() -> str:
@@ -86,86 +115,48 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global triangle count (+ node/edge counts) — module docstring for
     the orientation argument. The single output row makes the O(E^1.5)
     wedge-join bound the only thing the query can spend time on."""
-    users = (
-        load_table(spark, sf_dir, "events").select("user_id").distinct()
-    )
-    from ..io.stats import table_stats
-
-    _st = table_stats(spark, sf_dir, "events")
-    n = _st["max_user_id"] + 1
-    n_nodes = _st["n_users"]
-    raw = users.select(
-        F.col("user_id").alias("u"),
-        F.explode(
-            F.array(
-                *[
-                    ((F.col("user_id") * 7 + 11 * j) % n).alias(f"v{j}")
-                    for j in range(1, TRI_FAN + 1)
-                ]
-            )
-        ).alias("v"),
-    )
-    edges = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds degree + both join sides
-    )
-    deg = (
-        edges.select(F.col("a").alias("node"))
-        .unionByName(edges.select(F.col("b").alias("node")))
+    st = table_stats(spark, sf_dir, "events")
+    n = st["max_user_id"] + 1
+    # feeds the degrees and both join sides; its observed rows are |E|
+    edges, seen = materialize(_edges(spark, sf_dir))
+    n_edges = seen.rows
+    # node ids lie in [0, n): the degree relation's row bound
+    deg = broadcast_if_fits(
+        edges.selectExpr("explode(array(a, b)) AS node")
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
-        .select("node", (F.col("d") * n + F.col("node")).alias("k"))
+        .selectExpr("node", f"d * {n} + node AS k"),
+        n,
     )
-    ka = deg.select(F.col("node").alias("a"), F.col("k").alias("ka"))
-    kb = deg.select(F.col("node").alias("b"), F.col("k").alias("kb"))
-    oriented = (
-        edges.join(ka, "a")
-        .join(kb, "b")
-        .select(
-            F.when(F.col("ka") < F.col("kb"), F.col("a"))
-            .otherwise(F.col("b"))
-            .alias("src"),
-            F.when(F.col("ka") < F.col("kb"), F.col("b"))
-            .otherwise(F.col("a"))
-            .alias("dst"),
-            F.greatest("ka", "kb").alias("dst_k"),
+    oriented, _ = materialize(  # three consumers below
+        edges.join(deg.selectExpr("node AS a", "k AS ka"), "a")
+        .join(deg.selectExpr("node AS b", "k AS kb"), "b")
+        .selectExpr(
+            "IF(ka < kb, a, b) AS src",
+            "IF(ka < kb, b, a) AS dst",
+            "greatest(ka, kb) AS dst_k",
         )
-        .localCheckpoint(eager=True)  # three consumers below
     )
-    n_edges = edges.count()
     # r12: the wedge self-join and the closing-edge lookup both join the
     # O(E^1.5) wedge stream against an |E|-sized relation — with the
-    # edge count now measured BEFORE the join is planned, broadcast that
+    # edge count observed BEFORE the join is planned, broadcast that
     # side when it fits (guide §3.1): the wedge blowup then streams with
     # no exchange at all. Big graphs keep the shuffle joins.
-    small = n_edges * 24 < broadcast_threshold(spark)
-
-    def mb(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    e1 = oriented.select(
-        F.col("src").alias("s"), F.col("dst").alias("wb"),
-        F.col("dst_k").alias("kb_"),
+    e2 = oriented.selectExpr("src AS s", "dst AS wc", "dst_k AS kc_")
+    wedges = (
+        oriented.selectExpr("src AS s", "dst AS wb", "dst_k AS kb_")
+        .join(broadcast_if_fits(e2, n_edges), "s")
+        .filter("kb_ < kc_")
     )
-    e2 = oriented.select(
-        F.col("src").alias("s"), F.col("dst").alias("wc"),
-        F.col("dst_k").alias("kc_"),
-    )
-    wedges = e1.join(mb(e2), "s").filter(F.col("kb_") < F.col("kc_"))
-    closing = oriented.select(
-        F.col("src").alias("wb"), F.col("dst").alias("wc")
-    )
-    tri = wedges.join(mb(closing), ["wb", "wc"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
-    return tri.select(
-        F.lit(n_nodes).cast("bigint").alias("n_nodes"),
-        F.lit(n_edges).cast("bigint").alias("n_edges"),
-        F.col("n_triangles"),
+    closing = oriented.selectExpr("src AS wb", "dst AS wc")
+    return (
+        wedges.join(broadcast_if_fits(closing, n_edges), ["wb", "wc"])
+        .agg(F.count(F.lit(1)).alias("n_triangles"))
+        .selectExpr(
+            f"CAST({st['n_users']} AS BIGINT) AS n_nodes",
+            f"CAST({n_edges} AS BIGINT) AS n_edges",
+            "n_triangles",
+        )
     )
 
 
@@ -227,85 +218,50 @@ def graph_pagerank_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each iteration is ONE keyed join (ranks ⋈ edges on the
     source) + one grouped sum on the destination — the standard
-    Pregel-as-joins form; ranks materialize per iteration (localCheckpoint
+    Pregel-as-joins form; ranks materialize per iteration (`materialize`
     — the same lineage-cut every iterative op here uses), so the plan
     stays K independent joins, never a 2^K tree. At 100 TB the edge list
     would be bucketed by source so the per-iteration join is
     exchange-free on one side (`io/bucketed.py`)."""
-    users = (
-        load_table(spark, sf_dir, "events").select("user_id").distinct()
-    )
-    from ..io.stats import table_stats
-
-    _st = table_stats(spark, sf_dir, "events")
-    n = _st["max_user_id"] + 1
-    n_nodes = _st["n_users"]
-    raw = users.select(
-        F.col("user_id").alias("u"),
-        F.explode(
-            F.array(
-                *[
-                    ((F.col("user_id") * 7 + 11 * j) % n).alias(f"v{j}")
-                    for j in range(1, TRI_FAN + 1)
-                ]
-            )
-        ).alias("v"),
-    )
-    edges = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
+    n_nodes = table_stats(spark, sf_dir, "events")["n_users"]
+    bi, _ = materialize(_arcs(spark, sf_dir))
+    outdeg, seen = materialize(
+        bi.groupBy(F.col("u").alias("node")).agg(
+            F.count(F.lit(1)).alias("deg")
         )
-        .distinct()
     )
-    bi = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=True)
-    outdeg = bi.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint(eager=True)
     base = (15 * PR_Q) // (100 * n_nodes)
-    ranks = outdeg.select(
-        "node", F.lit(PR_Q // n_nodes).cast("bigint").alias("r")
+    ranks = outdeg.selectExpr(
+        "node", f"CAST({PR_Q // n_nodes} AS BIGINT) AS r"
     )
-    srcdeg = outdeg.select(F.col("node").alias("u"), F.col("deg"))
-    # r12: the rank/degree relations are |nodes| rows with a known bound
-    # (table stats); when they fit the broadcast threshold, hint them so
-    # each iteration streams the edge list through BroadcastHashJoins
+    # r12: the rank/degree relations are |nodes| rows (observed on the
+    # degree checkpoint); when they fit the broadcast threshold, hint them
+    # so each iteration streams the edge list through BroadcastHashJoins
     # (one exchange per iteration — the contrib aggregation — instead of
     # 3-4). The per-iteration lineage cut STAYS in both modes: eliding it
     # was tried and measured slower (the K nested broadcast builds
     # serialize on the driver and the fused plan pays one big codegen).
-    small = n_nodes * 16 < broadcast_threshold(spark)
-
-    def mb(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
+    nodes = seen.rows
+    srcdeg = broadcast_if_fits(outdeg.selectExpr("node AS u", "deg"), nodes)
     for _ in range(PR_ITERS):
+        src = broadcast_if_fits(ranks.selectExpr("node AS u", "r"), nodes)
         contrib = (
-            bi.join(mb(ranks.withColumnRenamed("node", "u")), "u")
-            .join(mb(srcdeg), "u")
-            .select("v", F.expr("r div deg").alias("c"))
-            .groupBy(F.col("v").alias("node"))
+            bi.join(src, "u")
+            .join(srcdeg, "u")
+            .selectExpr("v AS node", "r div deg AS c")
+            .groupBy("node")
             .agg(F.sum("c").alias("m"))
         )
-        ranks = (
+        ranks, _ = materialize(
             outdeg.select("node")
-            .join(mb(contrib), "node", "left")
-            .select(
+            .join(broadcast_if_fits(contrib, nodes), "node", "left")
+            .selectExpr(
                 "node",
-                (
-                    F.lit(base)
-                    + F.expr("85 * coalesce(m, 0) div 100")
-                ).cast("bigint").alias("r"),
+                f"CAST({base} + 85 * coalesce(m, 0) div 100 AS BIGINT) AS r",
             )
-            .localCheckpoint(eager=True)
         )
     return (
-        ranks.select(
-            F.col("node").alias("user_id"),
-            F.col("r").alias("rank_fx"),
-        )
+        ranks.selectExpr("node AS user_id", "r AS rank_fx")
         .orderBy(F.col("rank_fx").desc(), "user_id")
         .limit(PR_TOPK)
     )
@@ -378,44 +334,15 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one round = one map-side-combined degree groupBy +
     two semi-join edge filters — O(E) per round, K independent stages
-    (localCheckpoint lineage cut per round, like PageRank above). The
-    per-round counts are 1-row scalar aggregates; the result frame is
-    {KCORE_ROUNDS + 1} precomputed rows assembled on the driver."""
-    users = (
-        load_table(spark, sf_dir, "events").select("user_id").distinct()
-    )
-    from ..io.stats import table_stats
-
-    _st = table_stats(spark, sf_dir, "events")
-    n = _st["max_user_id"] + 1
-    n_nodes0 = _st["n_users"]
-    raw = users.select(
-        F.col("user_id").alias("u"),
-        F.explode(
-            F.array(
-                *[
-                    ((F.col("user_id") * 7 + 11 * j) % n).alias(f"v{j}")
-                    for j in range(1, TRI_FAN + 1)
-                ]
-            )
-        ).alias("v"),
-    )
-    edges = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    def counts(e: DataFrame) -> tuple[int, int]:
-        nodes = e.select(F.col("a").alias("node")).unionByName(
-            e.select(F.col("b").alias("node"))
-        ).distinct().count()
-        return nodes, e.count()
-    trace = [(0, *counts(edges))]
-    cur = edges
-    n_edges = trace[0][2]
+    (a materialized lineage cut per round, like PageRank above). The
+    trace's counts are observed on those materializations (the degree
+    frame's rows are the nodes left, its ``kept`` the nodes of degree
+    >= {KCORE_K}; the surviving edges' rows are the edges left), so no
+    round runs a count job; the result frame is the
+    {KCORE_ROUNDS + 1} trace rows held on the driver."""
+    cur, seen = materialize(_edges(spark, sf_dir))
+    n_edges = seen.rows
+    trace = [(0, 0, n_edges)]  # round 0's nodes: round 1's degree rows
     for r in range(1, KCORE_ROUNDS + 1):
         # r11: an empty graph is a fixed point — every remaining round is
         # (r, 0, 0) by definition, so fill the trace without running
@@ -424,37 +351,31 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         if n_edges == 0:
             trace.append((r, 0, 0))
             continue
-        # keep feeds three consumers (both semi-join sides + the count);
-        # materialize it once instead of re-running the degree aggregate
-        # for the nk count (r11 — the checkpoint is |nodes|-bounded).
-        keep = (
-            cur.select(F.col("a").alias("node"))
-            .unionByName(cur.select(F.col("b").alias("node")))
+        deg, d = materialize(
+            cur.selectExpr("explode(array(a, b)) AS node")
             .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= KCORE_K)
-            .select("node")
-            .localCheckpoint(eager=True)
+            .agg(F.count(F.lit(1)).alias("deg")),
+            kept=F.count_if(F.col("deg") >= KCORE_K),
         )
-        # r12: keep is bounded by |nodes| (known from stats) — broadcast
-        # the semi-join filters when it fits, so the surviving-edge pass
-        # streams the edge checkpoint with no exchange
-        kb = (
-            F.broadcast(keep)
-            if n_nodes0 * 8 < broadcast_threshold(spark)
-            else keep
+        if r == 1:
+            trace[0] = (0, d.rows, n_edges)
+        # r12: broadcast the kept nodes (observed) to both semi-join
+        # filters when they fit, so the surviving-edge pass streams the
+        # edge checkpoint with no exchange
+        keep = broadcast_if_fits(
+            deg.filter(F.col("deg") >= KCORE_K).select("node"), d.kept
         )
-        cur = (
-            cur.join(kb.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(kb.withColumnRenamed("node", "b"), "b", "left_semi")
+        cur, e = materialize(
+            cur.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
+            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        nk = keep.count()
-        n_edges = cur.count()
-        trace.append((r, nk, n_edges))
-    return spark.createDataFrame(
-        trace, "round bigint, nodes_remaining bigint, edges_remaining bigint"
+        n_edges = e.rows
+        trace.append((r, d.kept, n_edges))
+    return local_frame(
+        spark,
+        "round bigint, nodes_remaining bigint, edges_remaining bigint",
+        trace,
     )
 
 
@@ -518,67 +439,32 @@ def graph_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     source) + one min-groupBy — the Pregel relaxation step, O(E)/round,
     lineage cut per round. The same MATERIALIZED-CTE oracle discipline
     as k-core (plain chained CTEs inline multiplicatively)."""
-    users = (
-        load_table(spark, sf_dir, "events").select("user_id").distinct()
+    users = _users(spark, sf_dir)
+    bi, _ = materialize(_arcs(spark, sf_dir))
+    dist = users.filter(f"user_id % {BFS_SEED_MOD} = 0").selectExpr(
+        "user_id AS node", "0 AS dist"
     )
-    from ..io.stats import table_stats
-
-    n = table_stats(spark, sf_dir, "events")["max_user_id"] + 1
-    raw = users.select(
-        F.col("user_id").alias("u"),
-        F.explode(
-            F.array(
-                *[
-                    ((F.col("user_id") * 7 + 11 * j) % n).alias(f"v{j}")
-                    for j in range(1, TRI_FAN + 1)
-                ]
-            )
-        ).alias("v"),
-    )
-    edges = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        .distinct()
-    )
-    bi = edges.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(
-        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=True)
-    dist = users.filter(F.col("user_id") % BFS_SEED_MOD == 0).select(
-        F.col("user_id").alias("node"), F.lit(0).alias("dist")
-    )
-    # r12: dist is bounded by |nodes| (known from table stats) — when it
-    # fits the broadcast threshold, hint it so the relaxation join
-    # streams the edge list instead of shuffling it every round (one
-    # exchange per round — the min-groupBy — instead of three). The
-    # per-round checkpoint stays: dist has TWO consumers per round (the
-    # join and the union), so eliding the cut would re-execute the chain
-    # 2^K times.
-    small = n * 16 < broadcast_threshold(spark)
-
-    def mb(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
+    # r12: dist is bounded by the node ids [0, n) (table stats), then by
+    # each round's observed rows — when it fits the broadcast threshold,
+    # hint it so the relaxation join streams the edge list instead of
+    # shuffling it every round (one exchange per round — the min-groupBy
+    # — instead of three). The per-round checkpoint stays: dist has TWO
+    # consumers per round (the join and the union), so eliding the cut
+    # would re-execute the chain 2^K times.
+    rows = table_stats(spark, sf_dir, "events")["max_user_id"] + 1
     for _ in range(BFS_DEPTH):
-        expanded = (
-            bi.join(mb(dist.withColumnRenamed("node", "u")), "u")
-            .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
+        expanded = bi.join(
+            broadcast_if_fits(dist.withColumnRenamed("node", "u"), rows), "u"
+        ).selectExpr("v AS node", "dist + 1 AS dist")
+        dist, seen = materialize(
             dist.unionByName(expanded)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
+        rows = seen.rows
     unreached = users.join(
         dist.withColumnRenamed("node", "user_id"), "user_id", "left_anti"
-    ).agg(F.count(F.lit(1)).alias("n_nodes")).select(
-        F.lit(-1).cast("bigint").alias("dist"),
-        F.col("n_nodes").cast("bigint"),
-    )
+    ).selectExpr("CAST(-1 AS BIGINT) AS dist", "count(1) AS n_nodes")
     hist = dist.groupBy(
         F.col("dist").cast("bigint").alias("dist")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))

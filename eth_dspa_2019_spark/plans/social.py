@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.cache import query_data
+from ..io.materialize import materialize
 from ..operators.resolve import resolved_activities
 from ..schemas import KIND_COMMENT, KIND_REPLY
 from ..sources.activity import LANGS, load_activities
@@ -169,7 +170,7 @@ def _resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The resolved activity stream: the resolution fixpoint is iterative,
     so it runs once per session + scale."""
     df = resolved_activities(load_activities(spark, sf_dir))
-    return df.select(*_RESOLVED_COLS).localCheckpoint(eager=True)
+    return materialize(df.select(*_RESOLVED_COLS))[0]
 
 
 def _task1_counts(spark: SparkSession, sf_dir: str, kind: str, out: str) -> DataFrame:

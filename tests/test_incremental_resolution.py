@@ -397,14 +397,14 @@ def test_chase_honours_a_disabled_broadcast_threshold(spark, sf_dir, monkeypatch
 
 def test_one_pointer_chase_without_probes():
     """The reply→root chase lives in ``operators/resolve.py`` and the
-    stream resolver only folds its state: neither module runs a probe
-    job or its own checkpoint, and only the session, the broadcast rule
-    (``io/materialize.py``) and the graph loops read the broadcast
+    stream resolver only folds its state: neither module, nor the graph
+    loops, runs a probe job or its own checkpoint, and only the session
+    and the broadcast rule (``io/materialize.py``) read the broadcast
     threshold."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "eth_dspa_2019_spark"
-    for rel in ("operators/resolve.py", "streaming/resolution.py"):
+    for rel in ("operators/resolve.py", "streaming/resolution.py", "plans/graph.py"):
         src = (pkg / rel).read_text()
         for probe in ("localCheckpoint", ".count()", ".first()"):
             assert probe not in src, (rel, probe)
@@ -413,4 +413,4 @@ def test_one_pointer_chase_without_probes():
         for f in pkg.rglob("*.py")
         if "broadcast_threshold" in f.read_text()
     }
-    assert readers == {"session.py", "io/materialize.py", "plans/graph.py"}
+    assert readers == {"session.py", "io/materialize.py"}
