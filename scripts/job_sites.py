@@ -1,17 +1,18 @@
 """Print each query's Spark jobs per engine call site.
 
-Usage: python scripts/job_sites.py [--sf DIR] [--runs N] <query> [<query> ...]
+Usage: python scripts/job_sites.py [--sf DIR] <query> [<query> ...]
 
-Every query is built and collected (``toArrow()``) ``--runs`` times in one
-session (default 2: the first run is cold, later runs reuse the session's
-caches and table statistics). Each DataFrame action the engine calls —
-``count``, ``first``, ``collect``, ``head``, ``localCheckpoint``,
-``toArrow`` — runs under a job group of its own, named after the nearest
-engine frame that called it (a call through ``io/materialize.py`` is
-listed under the caller of ``materialize``). ``statusTracker()`` then
-lists each group's jobs and the tasks they ran; a site's calls are how
-often it ran (a loop body runs once per round). Jobs outside any action (a schema inference, a
-broadcast started while planning) are listed as ``(other)``.
+Every query is built and collected (``toArrow()``) twice in one session:
+cold, then warm (reusing the session's caches and table statistics).
+Each DataFrame action the engine calls — ``count``, ``first``,
+``collect``, ``head``, ``localCheckpoint``, ``toArrow`` — runs in a span
+of its own (``perfbench/spans.py``: one job group per span), named after
+the nearest engine frame that called it (a call through
+``io/materialize.py`` is listed under the caller of ``materialize``).
+``statusTracker()`` then lists each span's jobs and the tasks they ran;
+a site's calls are how often it ran (a loop body runs once per round).
+Jobs outside any action (a schema inference, a broadcast started while
+planning) are listed as ``(other)``.
 
 Patches ``pyspark.sql.classic.dataframe.DataFrame``: under PySpark 4
 ``pyspark.sql.DataFrame`` is the abstract parent class, so patching it
@@ -25,7 +26,6 @@ import argparse
 import functools
 import os
 import sys
-import threading
 from collections import OrderedDict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -51,13 +51,15 @@ def _site(action: str) -> str:
 
 
 class JobSites:
-    """Runs each outermost action under a job group per call site."""
+    """Runs each outermost action in a span of its own, under the query's
+    span (``perfbench/spans.py``: a span is a job group)."""
 
     def __init__(self, spark):
+        from spans import Tracer
+
         self.sc = spark.sparkContext
-        self.local = threading.local()
-        self.groups: OrderedDict[str, str] = OrderedDict()  # group -> site
-        self.prefix = ""
+        self.tracer = Tracer(spark, enabled=True)
+        self.busy = False  # inside an action: nested calls join its span
 
     def patch(self) -> None:
         from pyspark.sql.classic.dataframe import DataFrame
@@ -68,64 +70,52 @@ class JobSites:
     def _wrap(self, fn, name):
         @functools.wraps(fn)
         def action(*args, **kwargs):
-            if getattr(self.local, "depth", 0):
+            if self.busy:
                 return fn(*args, **kwargs)  # nested: first → head → take
-            group = f"{self.prefix}#{len(self.groups)}"
-            self.groups[group] = _site(name)
-            prev = self.sc.getLocalProperty("spark.jobGroup.id")
-            self.local.depth = 1
-            self.sc.setJobGroup(group, group)
+            site = _site(name)
+            self.busy = True
             try:
-                return fn(*args, **kwargs)
+                with self.tracer.span(site):
+                    return fn(*args, **kwargs)
             finally:
-                self.local.depth = 0
-                self.sc.setLocalProperty("spark.jobGroup.id", prev)
-                self.sc.setLocalProperty("spark.job.description", prev)
+                self.busy = False
 
         return action
 
-    def _count(self, group: str) -> tuple[int, int]:
-        """(jobs, tasks run) of a job group."""
+    def _tasks(self, jobs: list[int]) -> int:
+        """Tasks the jobs ran."""
         tracker = self.sc.statusTracker()
-        jobs = tracker.getJobIdsForGroup(group)
         tasks = 0
         for job in jobs:
             info = tracker.getJobInfo(job)
             for stage in info.stageIds if info else ():
                 sinfo = tracker.getStageInfo(stage)
                 tasks += sinfo.numCompletedTasks if sinfo else 0
-        return len(jobs), tasks
+        return tasks
 
     def run(self, label: str, thunk) -> list[tuple[str, int, int, int]]:
         """Run ``thunk`` and return ``[(site, calls, jobs, tasks), ...]``
         in call order, ``(other)`` last."""
-        self.prefix = label
-        other = f"{label}#other"
-        start = len(self.groups)
-        self.sc.setJobGroup(other, other)
-        try:
+        with self.tracer.span(label) as top:
             thunk()
-        finally:
-            self.sc.setLocalProperty("spark.jobGroup.id", None)
-            self.sc.setLocalProperty("spark.job.description", None)
         sites: OrderedDict[str, list[int]] = OrderedDict()
-        for group, site in list(self.groups.items())[start:]:
-            row = sites.setdefault(site, [0, 0, 0])
+        for span in self.tracer.children(top):
+            row = sites.setdefault(span.name, [0, 0, 0])
             row[0] += 1
-            for i, n in enumerate(self._count(group), 1):
-                row[i] += n
+            row[1] += len(span.jobs)
+            row[2] += self._tasks(span.jobs)
         rows = [(site, *row) for site, row in sites.items()]
-        jobs, tasks = self._count(other)
-        return rows + [("(other)", 0, jobs, tasks)] if jobs else rows
+        if top.jobs:
+            rows.append(("(other)", 0, len(top.jobs), self._tasks(top.jobs)))
+        return rows
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
-    sys.path.insert(0, ROOT)
+    sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
     from eth_dspa_2019_spark.plans import all_queries
     from eth_dspa_2019_spark.session import get_spark
 
@@ -137,14 +127,13 @@ def main() -> int:
     tracer.patch()
     try:
         for name in args.queries:
-            for run in range(args.runs):
-                label = f"{name}/run{run}"
+            for kind in ("cold", "warm"):
                 sites = tracer.run(
-                    label, lambda: qs[name].spark(spark, args.sf).toArrow()
+                    f"{name}/{kind}",
+                    lambda: qs[name].spark(spark, args.sf).toArrow(),
                 )
                 total = sum(row[2] for row in sites)
-                kind = "cold" if run == 0 else "warm"
-                print(f"{name}  run {run} ({kind}): {total} jobs")
+                print(f"{name}  {kind}: {total} jobs")
                 print("  jobs  calls  tasks  site")
                 for site, calls, jobs, tasks in sites:
                     print(f"  {jobs:4d}  {calls:5d}  {tasks:5d}  {site}")

@@ -22,3 +22,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def job_ids(spark):
+    """``job_ids(group, fn)``: the sorted ids of the Spark jobs ``fn()``
+    launches, counted under a job group of their own."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:  # a null value removes the property
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -309,19 +309,7 @@ def test_chase_state_side_is_semi_join_pruned(spark):
     assert sorted(map(tuple, pruned.collect())) == [(3, 30), (7, 70)]
 
 
-def _jobs(spark, group, fn):
-    """Spark job ids ``fn()`` launches, counted under its own job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:  # a null value removes the property
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_batch_chase_job_budget(spark, sf_dir):
+def test_batch_chase_job_budget(spark, sf_dir, job_ids):
     """The batch callers of the one chase, built and collected over the
     session's parsed activities: the seed checkpoint, then per hop the
     observed join and its broadcasts — no probe jobs (at most 8 each)."""
@@ -332,11 +320,11 @@ def test_batch_chase_job_budget(spark, sf_dir):
         ("resolve_post_ids", resolve_post_ids),
         ("comment_depths", comment_depths),
     ):
-        jobs = _jobs(spark, f"test-chase-{name}", lambda: fn(acts).toArrow())
+        jobs = job_ids(f"test-chase-{name}", lambda: fn(acts).toArrow())
         assert 0 < len(jobs) <= 8, (name, jobs)
 
 
-def test_resolver_steady_batch_job_budget(spark, sf_dir, tmp_path):
+def test_resolver_steady_batch_job_budget(spark, sf_dir, tmp_path, job_ids):
     """A steady resolver micro-batch (begin, fold, commit with durable
     state; batch 2 of 3 event-time chunks) launches at most 10 jobs: the
     chase's seed checkpoint replaces the pending checkpoint, so the
@@ -356,7 +344,7 @@ def test_resolver_steady_batch_job_budget(spark, sf_dir, tmp_path):
             r.process_batch(chunk)
             r.commit(bid)
 
-        jobs = _jobs(spark, f"test-resolver-batch-{bid}", fold)
+        jobs = job_ids(f"test-resolver-batch-{bid}", fold)
     assert 0 < len(jobs) <= 10, jobs
 
 

@@ -198,7 +198,7 @@ def test_detector_state_writes_are_o_batch(spark, sf_dir, tmp_path):
         assert sorted(r[0] for r in staged.select("person_id").collect()) == want
 
 
-def test_detector_steady_batch_job_budget(spark, sf_dir, tmp_path):
+def test_detector_steady_batch_job_budget(spark, sf_dir, tmp_path, job_ids):
     """A steady micro-batch of the detector (begin, fold, commit with
     durable state) launches at most 11 Spark jobs: one observed pass over
     the batch plus the state writes. Per-job scheduling is the fixed
@@ -209,36 +209,26 @@ def test_detector_steady_batch_job_budget(spark, sf_dir, tmp_path):
         for lo, hi in _ts_chunks(acts, 3)
     ]
     det = StreamingAnomalyDetector(spark, state_dir=str(tmp_path / "state"))
-    sc = spark.sparkContext
-    group = "test-detector-steady-batch"
     for bid, chunk in enumerate(chunks):
-        if bid == len(chunks) - 1:
-            sc.setJobGroup(group, group)
-        try:
+
+        def fold(bid=bid, chunk=chunk):
             det.begin_batch(bid)
             det.process_batch(chunk)
             det.commit(bid)
-        finally:  # a null value removes the property
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 11, sorted(jobs)
+
+        jobs = job_ids(f"test-detector-batch-{bid}", fold)
+    assert 0 < len(jobs) <= 11, jobs
 
 
-def test_batch_task3_job_budget(spark, sf_dir):
+def test_batch_task3_job_budget(spark, sf_dir, job_ids):
     """The batch Task 3 queries, built and collected over the session's
     parsed activities: ``task3_anomalies`` is the fold's one observed
     pass plus the flagged scan (at most 8 jobs), ``task3_user_features``
     one windowed scan (at most 2)."""
     load_activities(spark, sf_dir)  # parsed once per session, as in a run
-    sc = spark.sparkContext
     for name, budget in (("task3_anomalies", 8), ("task3_user_features", 2)):
-        group = f"test-batch-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            all_queries()[name].spark(spark, sf_dir).toArrow()
-        finally:  # a null value removes the property
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert 0 < len(jobs) <= budget, (name, sorted(jobs))
+        query = all_queries()[name].spark
+        jobs = job_ids(
+            f"test-batch-{name}", lambda: query(spark, sf_dir).toArrow()
+        )
+        assert 0 < len(jobs) <= budget, (name, jobs)
